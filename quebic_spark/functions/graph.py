@@ -52,6 +52,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from quebic_spark.session import local_rows_frame
+
 DRIVER_CC_MAX_EDGES = 1_000_000
 
 
@@ -192,19 +194,10 @@ def _driver_union_find(
         F.col("src").alias("doc_id"),
         F.col("src").alias("cluster_id"),
     ).schema
-    if not pairs:
-        return spark.createDataFrame([], schema)
-    # pandas input, not a list (r21): createDataFrame(list) always
-    # takes the parallelize+pickle path — 32 partitions whose every
-    # task spawns a Python worker just to unpickle a few label rows
-    # (profiled on dedup_clusters: an 11 CPU-s, 0.1-compute broadcast
-    # build stage). The pandas/Arrow path ships the batches into a
-    # JVM-side RDD with no Python workers at evaluation; coalesce(1)
-    # folds the slices so the broadcast build is one trivial task.
-    import pandas as pd
-
-    pdf_labels = pd.DataFrame(pairs, columns=["doc_id", "cluster_id"])
-    return spark.createDataFrame(pdf_labels, schema=schema).coalesce(1)
+    # one home for small driver-side frames: the Arrow path with no
+    # Python workers at evaluation, falling back to the list path if
+    # the conversion fails
+    return local_rows_frame(spark, pairs, schema)
 
 
 def _distributed_min_label(

@@ -1389,6 +1389,15 @@ def bloom_probe_udf(bloom: bytes, k: int = BLOOM_HASHES):
 
     bits = np.frombuffer(bloom, dtype=np.uint8)
     m_bits = len(bits) * 8
+    if m_bits < 8 or m_bits & (m_bits - 1):
+        # same contract as build_bloom: _bloom_h_cols reduces h1 with
+        # & (m - 1), which is mod m only for a power of two — any
+        # other length would probe the wrong bits and answer "new"
+        # for keys the filter holds (silent false negatives)
+        raise ValueError(
+            f"bloom filter must be a power-of-two number of bits >= 8 "
+            f"(as build_bloom makes it), got {len(bits)} bytes"
+        )
 
     def probe(h1s, h2s, nulls):
         if not len(h1s):

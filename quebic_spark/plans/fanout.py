@@ -24,17 +24,21 @@ def _scan_split_estimate(spark: SparkSession, df: DataFrame) -> int | None:
     cross-cutting, ~0.3-0.5 s per bench gate). For the only frames the
     operators pass here (fresh ``spark.read.parquet(...)``), the split
     count Spark would produce is a pure function of the relation's
-    byte size and three confs — mirror ``FilePartition.maxSplitBytes``
-    arithmetically instead:
+    per-file byte lengths and three confs — mirror
+    ``FilePartition.maxSplitBytes`` and ``getFilePartitions``
+    arithmetically instead, with openCost charged per FILE:
 
-        bytes_per_core = (size + openCost) / defaultParallelism
+        bytes_per_core = (sum(lengths) + n_files * openCost)
+                         / defaultParallelism
         split          = min(maxPartitionBytes,
                              max(openCost, bytes_per_core))
-        est            = ceil(size / split)
 
-    (single-relation form: the per-file openCost padding is folded in
-    once — the operators read one table per call, and the estimate
-    only feeds a >= threshold decision, never semantics).
+    One file: ``ceil(length / split)``. Several: cut every file into
+    pieces of at most ``split`` bytes, sort all pieces by length
+    descending, and pack them greedily in that order — each piece
+    is charged its bytes plus openCost, and a partition closes when
+    its charge plus the next piece's bytes would exceed ``split``.
+    The estimate counts those partitions.
 
     Returns ``None`` whenever the plan is anything but a single file
     relation or any step fails — the caller falls back to the exact

@@ -38,6 +38,7 @@ import time
 from typing import Any, Callable, Iterable, Sequence
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 
 log = logging.getLogger(__name__)
 
@@ -50,6 +51,7 @@ from quebic_spark.queue.storage import (
     bounded_row_group_rows,
     fsync_path,
     large_offset_schema,
+    read_log_file,
     spark_ddl,
     write_json_atomic,
 )
@@ -412,21 +414,34 @@ class Queue:
                 expired_rewrite_fraction: float = 0.5,
                 stream_checkpoint: str | None = None,
                 merge_undiscovered: bool = False) -> int:
-        """Tiered log compaction: drop acked/expired rows, merge runs of
-        small files, leave large clean files untouched.
+        """Tiered log compaction: drop acked/expired rows, merge small
+        files by size tier, leave large clean files untouched.
 
         Replaces the reference's journal->queue migration + spaceOut
         (JournaledFile.scala:406-452, 491-520) — our log is already
-        FIFO-ordered by seq, so compaction is purely physical. Tiering
-        matters at scale: a naive compact rewrites the entire log every
-        time (O(total) per call); this one rewrites only (a) files with
-        consumed rows, (b) files under ``small_file_rows``, (c) files
-        whose TTL-expired row fraction reaches
-        ``expired_rewrite_fraction`` (large clean files otherwise stay
-        untouched; expired rows are dropped at consume time regardless —
-        TTL parity, JournaledFile.scala:244-264 — but a mostly-expired
-        big file is dead weight worth reclaiming). Steady-state cost is
-        proportional to new data, not log size.
+        FIFO-ordered by seq, so compaction is purely physical. Per file:
+
+        * fully consumed: deleted (the max-seq file excepted, below);
+        * straddling the ack pointer: rewritten without its consumed
+          rows;
+        * clean (fully unconsumed) and under ``small_file_rows``:
+          merged by size tier. Each run of adjacent clean small files
+          is walked newest to oldest, and an older file joins the
+          merge only while its row count is at most twice the rows
+          gathered so far; the first file that fails stops the walk,
+          and a merge of one file is not made. As in a size-tiered
+          LSM tree, a merged file is at least the sum of the files it
+          absorbed, so with no consumer a record is rewritten
+          O(log n) times over a backlog of n records rather than once
+          per call, and the log keeps O(log n) tier files;
+        * any clean file the tiers leave, large or small, is kept —
+          unless its TTL-expired row fraction reaches
+          ``expired_rewrite_fraction``, when it is rewritten without
+          the expired rows (they are dropped at consume time
+          regardless — TTL parity, JournaledFile.scala:244-264 — but a
+          mostly-expired file is dead weight worth reclaiming).
+
+        Adjacent files that are rewritten form one merged output.
 
         The max-seq record is always retained even when acked so
         ``latest`` survives emptiness (parity with
@@ -526,7 +541,6 @@ class Queue:
             )
         self.last_compact_skipped = False
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
         with self._storage.lock:
             # never touch files at/beyond the writer position: those
@@ -543,13 +557,15 @@ class Queue:
             max_seq = max(end for _, end, _ in batches)
             now = _now_ms()
 
-            def expired_fraction(path: str) -> float:
+            def vacuumable(path: str) -> bool:
                 # one-column read; vectorized count of 0 <= exp <= now
-                col = pq.read_table(
-                    path, columns=["expires_at"]
-                ).column("expires_at")
+                if expired_rewrite_fraction >= 1.0:
+                    return False
+                col = read_log_file(path, ["expires_at"]).column(
+                    "expires_at"
+                )
                 if len(col) == 0:
-                    return 0.0
+                    return False
                 expired = pc.sum(
                     pc.cast(
                         pc.and_(pc.greater_equal(col, 0),
@@ -557,43 +573,68 @@ class Queue:
                         pa.int64(),
                     )
                 ).as_py() or 0
-                return expired / len(col)
+                return expired / len(col) >= expired_rewrite_fraction
 
             def classify(start: int, end: int, path: str) -> str:
-                contains_max = end == max_seq
-                if end <= acked and not contains_max:
+                if end <= acked and end != max_seq:
                     return "drop"  # fully consumed
-                if (
-                    start > acked
-                    and (end - start + 1) >= small_file_rows
-                ):
-                    # large, fully unconsumed: keep — unless mostly dead
-                    # (TTL churn), then reclaim the space now instead of
-                    # waiting for the consumer to pass it
-                    if (
-                        expired_rewrite_fraction < 1.0
-                        and expired_fraction(path)
-                        >= expired_rewrite_fraction
-                    ):
-                        return "rewrite"
-                    return "keep"
-                return "rewrite"
+                if start <= acked:
+                    return "rewrite"  # straddles acked: shed its consumed rows
+                if end - start + 1 < small_file_rows:
+                    return "small"  # clean: merged or kept by size tier below
+                # large, fully unconsumed: keep — unless mostly dead
+                # (TTL churn), then reclaim the space now instead of
+                # waiting for the consumer to pass it
+                return "rewrite" if vacuumable(path) else "keep"
+
+            def tier_start(run: list[tuple[int, int, str]]) -> int:
+                # index of the oldest file in the newest size tier of a
+                # run of clean small files (see the docstring), or
+                # len(run) when that tier is a single file
+                total, k = 0, len(run)
+                while k:
+                    rows = run[k - 1][1] - run[k - 1][0] + 1
+                    if total and rows > 2 * total:
+                        break
+                    total += rows
+                    k -= 1
+                return k if len(run) - k >= 2 else len(run)
+
+            kinds = [classify(*b) for b in batches]
+            # tier each maximal run of clean small files; a small file
+            # the tier keeps still gets the expired-fraction check, so
+            # TTL vacuuming reaches it as it reaches large files
+            i = 0
+            while i < len(batches):
+                if kinds[i] != "small":
+                    i += 1
+                    continue
+                j = i
+                while j < len(batches) and kinds[j] == "small":
+                    j += 1
+                first = i + tier_start(batches[i:j])
+                for m in range(i, j):
+                    kinds[m] = (
+                        "rewrite"
+                        if m >= first or vacuumable(batches[m][2])
+                        else "keep"
+                    )
+                i = j
 
             # group adjacent rewrite files into runs so merged chunks
             # never overlap kept files' seq ranges
             runs: list[list[tuple[int, int, str]]] = [[]]
             to_remove: list[str] = []
             n_kept = 0
-            for start, end, path in batches:
-                kind = classify(start, end, path)
+            for batch, kind in zip(batches, kinds):
                 if kind == "drop":
-                    to_remove.append(path)
+                    to_remove.append(batch[2])
                 elif kind == "keep":
                     n_kept += 1
                     if runs[-1]:
                         runs.append([])
                 else:
-                    runs[-1].append((start, end, path))
+                    runs[-1].append(batch)
 
             staged: list[str] = []
             new_files = 0
@@ -601,44 +642,29 @@ class Queue:
                 if not run:
                     continue
                 tables = []
-                canonical = arrow_schema(self.schema)
-                # merge in 64-bit-offset arrow types: a run can hold
-                # far more than the 2 GiB a 32-bit binary/string
-                # offset array addresses (r13 big-file evidence run:
-                # 2100 x 1 MiB rows crashed concat+sort here)
-                merge_schema = large_offset_schema(canonical)
                 for start, end, path in run:
-                    # normalize to the canonical log schema: Spark-written
-                    # bulk files mark payload fields nullable while the
-                    # pyarrow push path writes them non-null; concat of
-                    # mixed provenance would fail on that mismatch.
-                    # Format-v1 files predate codec_id: backfill with the
-                    # queue-level codec (exactly the old implicit
-                    # semantics) so old logs compact instead of raising.
-                    t = pq.read_table(path)
-                    if "codec_id" not in t.column_names:
-                        t = t.append_column(
-                            pa.field("codec_id", pa.int32(),
-                                     nullable=False),
-                            pa.array([self.codec.id] * t.num_rows,
-                                     type=pa.int32()),
-                        )
-                    t = t.select(canonical.names).cast(merge_schema)
-                    seq_col = t.column("seq")
+                    t = self._read_canonical(path)
                     exp_col = t.column("expires_at")
-                    alive = pc.or_(pc.less(exp_col, 0),
-                                   pc.greater(exp_col, now))
-                    keep_mask = pc.or_(
-                        pc.and_(pc.greater(seq_col, acked), alive),
-                        pc.equal(seq_col, max_seq),
-                    )
-                    t = t.filter(keep_mask)
+                    # filter only when a row can go: the file holds
+                    # consumed rows or some row carries a TTL
+                    exp_max = pc.max(exp_col).as_py()
+                    if start <= acked or (
+                        exp_max is not None and exp_max >= 0
+                    ):
+                        seq_col = t.column("seq")
+                        alive = pc.or_(pc.less(exp_col, 0),
+                                       pc.greater(exp_col, now))
+                        keep_mask = pc.or_(
+                            pc.and_(pc.greater(seq_col, acked), alive),
+                            pc.equal(seq_col, max_seq),
+                        )
+                        t = t.filter(keep_mask)
                     if t.num_rows:
                         tables.append(t)
                     to_remove.append(path)
                 if not tables:
                     continue
-                merged = pa.concat_tables(tables).sort_by("seq")
+                merged = self._concat_for_merge(tables).sort_by("seq")
                 seqs = merged.column("seq").to_pylist()
                 for off in range(0, merged.num_rows, target_file_rows):
                     chunk = merged.slice(off, target_file_rows)
@@ -725,6 +751,40 @@ class Queue:
             self._storage.drop_row_cache()
             self._batch_files_estimate = new_files + n_kept
             return new_files + n_kept
+
+    def _read_canonical(self, path: str) -> pa.Table:
+        """One log file in the canonical log schema's column order.
+        Format-v1 files predate codec_id: backfill it with the
+        queue-level codec (exactly the old implicit semantics) so old
+        logs compact instead of raising."""
+        t = read_log_file(path)
+        if "codec_id" not in t.column_names:
+            t = t.append_column(
+                pa.field("codec_id", pa.int32(), nullable=False),
+                pa.array([self.codec.id] * t.num_rows, type=pa.int32()),
+            )
+        return t.select(arrow_schema(self.schema).names)
+
+    def _concat_for_merge(self, tables: list[pa.Table]) -> pa.Table:
+        """Concatenate log tables in 64-bit-offset arrow types: a merge
+        can hold far more than the 2 GiB a 32-bit binary/string offset
+        array addresses (r13 big-file evidence run: 2100 x 1 MiB rows
+        crashed concat+sort here). The cast also normalizes
+        provenance: Spark-written bulk files mark payload fields
+        nullable while the pyarrow push path writes them non-null, and
+        concat of mixed schemas would fail. One cast per run of
+        same-schema tables, not one per file — a merge of many
+        single-record files is otherwise mostly per-file overhead."""
+        merge_schema = large_offset_schema(arrow_schema(self.schema))
+        groups: list[list[pa.Table]] = []
+        for t in tables:
+            if groups and groups[-1][0].schema.equals(t.schema):
+                groups[-1].append(t)
+            else:
+                groups.append([t])
+        return pa.concat_tables(
+            [pa.concat_tables(g).cast(merge_schema) for g in groups]
+        )
 
     def _compact_stream_safe(
         self,
@@ -818,8 +878,6 @@ class Queue:
     ) -> list[tuple[int, int, str]]:
         """Merge adjacent runs of small never-listed files (caller
         holds the storage lock; see ``_compact_stream_safe``)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
 
         def mergeable(start: int, end: int, path: str) -> bool:
             return (
@@ -873,28 +931,13 @@ class Queue:
             elif cur:
                 local.append(cur)
             runs.extend(local)
-        canonical = arrow_schema(self.schema)
-        # 64-bit-offset merge, same rationale as compact(): a run's
-        # total var-width payload can exceed the 2 GiB a 32-bit
-        # offset array addresses
-        merge_schema = large_offset_schema(canonical)
         for run in runs:
             if len(run) < 2:
                 out.extend(run)  # a chunk of one merges nothing
                 continue
-            tables = []
-            for _, _, path in run:
-                t = pq.read_table(path)
-                if "codec_id" not in t.column_names:
-                    t = t.append_column(
-                        pa.field("codec_id", pa.int32(), nullable=False),
-                        pa.array([self.codec.id] * t.num_rows,
-                                 type=pa.int32()),
-                    )
-                tables.append(
-                    t.select(canonical.names).cast(merge_schema)
-                )
-            merged = pa.concat_tables(tables).sort_by("seq")
+            merged = self._concat_for_merge(
+                [self._read_canonical(p) for _, _, p in run]
+            ).sort_by("seq")
             s = run[0][0]
             e = run[-1][1]
             staged_path = self._storage.batch_path(s, e) + ".compact"
@@ -951,7 +994,6 @@ class Queue:
         """
         self._check_open()
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
         canonical = arrow_schema(self.schema)
         replayed = 0
@@ -965,7 +1007,7 @@ class Queue:
             )
             for name in names:
                 path = os.path.join(dlq_dir, name)
-                t = pq.read_table(path)
+                t = read_log_file(path)
                 now = _now_ms()
                 exp = t.column("expires_at")
                 t = t.filter(
@@ -1056,7 +1098,6 @@ class Queue:
         """Walk the log asserting seq continuity and filename ranges
         (JournaledFile.verify, JournaledFile.scala:454-464)."""
         self._check_open()
-        import pyarrow.parquet as pq
 
         with self._storage.lock:
             # a dead compactor's half-done commit is not log damage —
@@ -1071,7 +1112,7 @@ class Queue:
             next_seq = self._storage.next_seq()
             prev_end = None
             for start, end, path in batches:
-                t = pq.read_table(path, columns=["seq"])
+                t = read_log_file(path, ["seq"])
                 seqs = sorted(t.column("seq").to_pylist())
                 if not seqs:
                     raise FormatException(f"empty batch file: {path}")
@@ -1121,7 +1162,6 @@ class Queue:
         """(entry_count, total_bytes, max_file_bytes) — the reference's
         only aggregation (JournaledFile.inspect, :472-483)."""
         self._check_open()
-        import pyarrow.parquet as pq
 
         # snapshot the listing under the lock (its embedded next_seq()
         # read can invoke _repair_next_seq's control-file write, which
@@ -1457,8 +1497,6 @@ class Queue:
             # The staged output is the source of truth for how many rows
             # were actually written — re-check capacity against it, and
             # only then rename anything (abort = rmtree, nothing leaks).
-            import pyarrow.parquet as pq
-
             part_files = sorted(
                 os.path.join(staging, f)
                 for f in os.listdir(staging)
@@ -1644,16 +1682,20 @@ class Publisher:
             or q._batch_files_estimate
             > q._auto_compact_futile_at + max(1, limit // 4)
         ):
+            # the size tiers merge the ~limit new single-record files
+            # and fold older tiers in only while they are at most
+            # twice as large, so an unconsumed backlog is not
+            # rewritten whole on every trigger
             remaining = q.compact()
             # when compaction can't shrink the count below the limit
-            # (files classified 'keep': large, unconsumed, mostly
-            # live — e.g. bulk fills with an idle consumer), EVERY
-            # subsequent push would re-run the full per-file
-            # expires_at column scans (r13 review). Latch the futile
-            # count and re-arm only after a quarter-limit of new
-            # files, amortizing the scans; a compaction that does
-            # get below the limit clears the latch. Heuristic delay
-            # only — correctness never depends on auto-compaction.
+            # (files kept: large, unconsumed, mostly live — e.g.
+            # bulk fills with an idle consumer), EVERY subsequent
+            # push would re-run the per-file expires_at column scans
+            # of the kept files (r13 review). Latch the futile count
+            # and re-arm only after a quarter-limit of new files,
+            # amortizing the scans; a compaction that does get below
+            # the limit clears the latch. Heuristic delay only —
+            # correctness never depends on auto-compaction.
             q._auto_compact_futile_at = (
                 remaining if remaining > limit else None
             )

@@ -270,6 +270,18 @@ def test_bloom_rejects_bad_m_bits(spark):
         build_bloom(keys, "k", m_bits=120)
 
 
+def test_bloom_probe_rejects_non_power_of_two_filter():
+    """The probe reduces h1 with ``& (m - 1)``: filter bytes that
+    build_bloom could not have made (a bit count that is not a power
+    of two) must raise, not probe the wrong bits and report members
+    as new."""
+    from quebic_spark.operators.dedup import bloom_probe_udf
+
+    for n_bytes in (0, 3, 24, 1 << 10 | 1):
+        with pytest.raises(ValueError, match="power-of-two"):
+            bloom_probe_udf(bytes(n_bytes))
+
+
 def test_bloom_handles_null_keys_like_exact_path(spark):
     """md5(NULL) is NULL: null-key rows must flow through the bloom
     tier unharmed and come out exactly as incremental_dedup leaves

@@ -1410,6 +1410,165 @@ def test_auto_compact_futile_latch(qpath, monkeypatch):
     q.close()
 
 
+def test_auto_compact_write_amplification_is_bounded(qpath, monkeypatch):
+    """Size-tiered auto-compaction: with no consumer, each record is
+    rewritten O(log n) times, not once per auto-compaction. Re-merging
+    the whole unconsumed backlog on every call rewrote about 31x the
+    pushed rows here; the tiers stay under 6x while keeping the log at
+    a handful of files."""
+    import pyarrow.parquet as pq
+
+    rewritten = []
+    real_write = pq.write_table
+
+    def counting_write(table, where, *a, **k):
+        if str(where).endswith(".compact.tmp"):
+            rewritten.append(table.num_rows)
+        return real_write(table, where, *a, **k)
+
+    files_after = []
+    real_compact = Queue.compact
+
+    def tracking_compact(self, *a, **k):
+        n = real_compact(self, *a, **k)
+        files_after.append(len(self._storage.list_batches()))
+        return n
+
+    monkeypatch.setattr(pq, "write_table", counting_write)
+    monkeypatch.setattr(Queue, "compact", tracking_compact)
+    n = 1000
+    q = Queue(qpath, SCHEMA, capacity=10**6, auto_compact_files=16)
+    pub, sub = q.publisher(), q.subscriber()
+    for i in range(n):
+        assert pub.try_push([i, f"v{i}"])
+    assert len(files_after) >= n // 17
+    assert max(files_after) <= 8, files_after
+    assert sum(rewritten) <= 6 * n, f"{sum(rewritten)} rows rewritten"
+    assert pub.latest() == (n - 1, f"v{n - 1}")
+    q.verify()
+    assert sub.pop_n(n) == [(i, f"v{i}") for i in range(n)]
+    q.close()
+
+
+def test_compact_leaves_a_lone_clean_small_file_untouched(qpath):
+    """Merging one file does nothing: a lone fully-unconsumed small
+    file with no TTL keeps its path, inode and mtime."""
+    import os as _os
+
+    q = Queue(qpath, SCHEMA, capacity=1000)
+    q.publisher().push_all([[i, f"v{i}"] for i in range(5)])
+    (_, _, path), = q._storage.list_batches()
+    before = _os.stat(path)
+    assert q.compact() == 1
+    (_, _, after_path), = q._storage.list_batches()
+    after = _os.stat(after_path)
+    assert after_path == path
+    assert (after.st_ino, after.st_mtime_ns) == (
+        before.st_ino, before.st_mtime_ns
+    )
+    assert q.subscriber().pop_n(5) == [(i, f"v{i}") for i in range(5)]
+    q.verify()
+    q.close()
+
+
+def test_tiered_compact_still_vacuums_a_kept_small_file(qpath):
+    """A small file the size tier leaves out still gets the
+    expired-fraction check: mostly expired, it is rewritten without
+    its dead rows; below the threshold it stays as it is. A lone
+    all-expired file shrinks to its max-seq row, so ``latest``
+    survives."""
+    import os as _os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from quebic_spark.queue.storage import arrow_schema
+
+    q = Queue(qpath, SCHEMA, capacity=1000)
+    # seqs 1..10 in one file: 8 already expired, 2 live
+    table = pa.table(
+        {
+            "seq": list(range(1, 11)),
+            "created_at": [0] * 10,
+            "expires_at": [1] * 8 + [-1] * 2,
+            "codec_id": [q.codec.id] * 10,
+            "c0": list(range(1, 11)),
+            "c1": [f"v{i}" for i in range(1, 11)],
+        },
+        schema=arrow_schema(SCHEMA),
+    )
+    q._storage.write_batch(table, 1, 10, "snappy")
+    q._storage.set_next_seq(11)
+    pub = q.publisher()
+    pub.push([11, "v11"])
+    pub.push([12, "v12"])
+    old = q._storage.list_batches()[0][2]
+
+    # 10 rows > 2x the 2 newer ones: the tier merges only 11-12, and
+    # 0.8 expired is under 0.95, so the 10-row file stays
+    assert q.compact(expired_rewrite_fraction=0.95) == 2
+    first, newest = q._storage.list_batches()
+    assert first[2] == old
+    assert newest[:2] == (11, 12)
+    newest_mtime = _os.stat(newest[2]).st_mtime_ns
+
+    # at the default 0.5 it is vacuumed; the 2-row file is a lone tier
+    # and stays untouched
+    assert q.compact() == 2
+    first, kept = q._storage.list_batches()
+    assert pq.read_table(first[2]).column("seq").to_pylist() == [9, 10]
+    assert kept == newest
+    assert _os.stat(kept[2]).st_mtime_ns == newest_mtime
+    assert pub.latest() == (12, "v12")
+    assert q.subscriber().pop_n(4) == [
+        (9, "v9"), (10, "v10"), (11, "v11"), (12, "v12")
+    ]
+    q.verify()
+    q.close()
+
+    q2 = Queue(qpath + "2", SCHEMA, capacity=1000)
+    pub2 = q2.publisher()
+    pub2.push_all([[i, f"t{i}"] for i in range(3)], lifetime_ms=20)
+    time.sleep(0.05)
+    q2.compact()
+    (_, _, path), = q2._storage.list_batches()
+    assert pq.read_table(path).column("seq").to_pylist() == [3]
+    assert pub2.latest() == (2, "t2")
+    assert q2.subscriber().try_pop() is None
+    q2.verify()
+    q2.close()
+
+
+def test_tiered_compact_rewrites_a_straddling_file(qpath):
+    """A file straddling the ack pointer is rewritten without its
+    consumed rows whatever the size tier decides about its clean
+    neighbours; a clean file the tier leaves out stays untouched."""
+    import os as _os
+
+    import pyarrow.parquet as pq
+
+    q = Queue(qpath, SCHEMA, capacity=1000)
+    pub, sub = q.publisher(), q.subscriber()
+    pub.push_all([[i, f"v{i}"] for i in range(1, 11)])   # seqs 1..10
+    pub.push_all([[i, f"v{i}"] for i in range(11, 51)])  # seqs 11..50
+    pub.push([51, "v51"])
+    pub.push([52, "v52"])
+    middle = q._storage.list_batches()[1]
+    middle_mtime = _os.stat(middle[2]).st_mtime_ns
+    assert sub.pop_n(4) == [(i, f"v{i}") for i in range(1, 5)]
+    q.compact()
+    batches = q._storage.list_batches()
+    assert [b[:2] for b in batches] == [(5, 10), (11, 50), (51, 52)]
+    assert pq.read_table(batches[0][2]).column("seq").to_pylist() == [
+        5, 6, 7, 8, 9, 10
+    ]
+    assert batches[1] == middle
+    assert _os.stat(middle[2]).st_mtime_ns == middle_mtime
+    assert sub.pop_n(48) == [(i, f"v{i}") for i in range(5, 53)]
+    q.verify()
+    q.close()
+
+
 def test_crash_between_flip_and_publish_is_a_legal_gap(qpath, monkeypatch):
     """Commit order is write-tmp -> flip pointer -> publish rename. A
     crash in the new window (after flip, before rename) must leave a
