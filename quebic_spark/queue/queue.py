@@ -236,7 +236,12 @@ class Queue:
                 # a crashed initialize() leaves no meta.json (it is
                 # written LAST, the commit point of creation — r18
                 # chaos drive), so initialize() below simply re-runs.
-                self._storage.recover()
+                touched = self._storage.recover()
+                if touched:
+                    log.warning(
+                        "queue %s: crash recovery touched %d path(s): %s",
+                        path, len(touched), ", ".join(touched),
+                    )
                 stored_schema, stored_cap, stored_codec = (
                     self._storage.load_meta()
                 )
@@ -259,11 +264,15 @@ class Queue:
                 # unprotected tear window)
                 self._storage.ensure_ctrl_format()
                 next_seq = self._storage.next_seq()
-                for start, end, path in self._storage.list_batches(
+                for start, _end, bpath in self._storage.list_batches(
                     include_uncommitted=True
                 ):
                     if start >= next_seq:
-                        os.remove(path)
+                        os.remove(bpath)
+                        log.warning(
+                            "queue %s: removed uncommitted batch file %s "
+                            "(at/beyond next_seq=%d)", path, bpath, next_seq,
+                        )
             else:
                 self._storage.initialize(schema, capacity, codec)
                 self._storage.default_codec_id = codec.id

@@ -9,7 +9,10 @@ design Spark-native):
                            zero-padded constant-length value -> the
                            per-push pointer flip is a single in-place
                            write, see set_next_seq)
-    <path>/consumer.json   {"acked_seq": N, "errors": {..}} (consumer state)
+    <path>/consumer.json   {"acked_seq": "<020d>", "errors": {..},
+                           "crc": "<010d>"}           (consumer state;
+                           the per-pop ack is one in-place write on
+                           one inode, see set_consumer_state)
     <path>/lock            fcntl lock file (cross-process safety,
                            parity with FileChannel.lock(), JournaledFile.scala:36)
     <path>/data/batch-<start>-<end>.parquet   append log; file name encodes
@@ -47,20 +50,29 @@ rename-then-flip order could leave a published file at/beyond the
 pointer for a sibling's later commit to overlap). A crash therefore
 leaves either never-committed ``.tmp`` debris (swept at open) or an
 advanced pointer with the rows absent — a legal seq gap, since the
-push never returned. consumer.json updates via write-temp + atomic
-rename; ctrl.json flips via a constant-length in-place write (in
-BOTH durability modes — fsync mode adds an fsync of the file, r14)
-whose partial-overwrite states are provably non-regressing, with
-torn-file reconstruction in ``_repair_next_seq`` (see
-``set_next_seq`` for the full argument). Keeping every ctrl write on
-one inode is what lets each process hold a persistent read/write fd
-to the pointer instead of paying open+close per operation.
+push never returned. Both control files are written in place, in
+BOTH durability modes (fsync mode adds an fsync of the file, never
+of the directory: no directory entry changes). ctrl.json flips via a
+constant-length write whose partial-overwrite states are provably
+non-regressing, with torn-file reconstruction in
+``_repair_next_seq`` (see ``set_next_seq`` for the full argument).
+consumer.json's ack is one write at offset 0, space-padded to at
+least the file's current length so no stale tail survives, and
+stamped with a crc32 over the seq digits and the errors map; a tear
+fails the crc or the parse and ``_repair_consumer_state`` rebuilds
+the ack at a safe lower bound (redelivery, never a skipped row; see
+``set_consumer_state``). Keeping every control write on one inode is
+what lets each process hold a persistent read/write fd to each file
+instead of paying open+close (and, for the ack, a temp file and a
+rename) per operation.
 """
 
 from __future__ import annotations
 
+import bisect
 import fcntl
 import json
+import logging
 import os
 import re
 import stat as stat_mod
@@ -82,6 +94,8 @@ from quebic_spark.schema import (
     DataType,
     Schema,
 )
+
+log = logging.getLogger(__name__)
 
 _BATCH_RE = re.compile(r"^batch-(\d{20})-(\d{20})\.parquet$")
 
@@ -299,6 +313,26 @@ def ctrl_payload(n: int) -> dict[str, str]:
     }
 
 
+def consumer_payload(acked: int, errors: dict[str, int]) -> dict[str, Any]:
+    """The one consumer-state format: zero-padded ack digits, the
+    per-record error counts, and a crc32 over the digits followed by
+    the errors map as ``json.dumps(errors, sort_keys=True)`` — the
+    in-place ack is not constant-length, so the crc must cover every
+    byte a tear could change (see ``set_consumer_state``)."""
+    seq_str = f"{acked:020d}"
+    return {
+        "acked_seq": seq_str,
+        "errors": errors,
+        "crc": f"{_consumer_crc(seq_str, errors):010d}",
+    }
+
+
+def _consumer_crc(seq_str: str, errors: dict[str, int]) -> int:
+    return zlib.crc32(
+        (seq_str + json.dumps(errors, sort_keys=True)).encode("utf-8")
+    )
+
+
 def fsync_path(path: str) -> None:
     """fsync a file or directory by path — the ONE open/fsync/close
     used by every durability-chain link (r14 review: six inline
@@ -356,6 +390,17 @@ def _write_all(fd: int, payload: bytes, write=os.write) -> None:
         view = view[n:]
 
 
+def _pwrite_all(fd: int, payload: bytes) -> None:
+    """pwrite(2) at offset 0 until every byte is down: os.pwrite may
+    land fewer bytes (ENOSPC, interruption) and only the return count
+    says so — looping keeps the single-write atomicity claim of the
+    in-place control files honest (r6 review). ``os.pwrite`` is looked
+    up per call so a test tracer patching it sees every write."""
+    done = 0
+    while done < len(payload):
+        done += os.pwrite(fd, payload[done:], done)
+
+
 def read_json(path: str) -> dict[str, Any]:
     with open(path, encoding="utf-8") as f:
         return json.load(f)
@@ -383,8 +428,9 @@ class QueueStorage:
         self.intent_path = os.path.join(path, "sweep-intent")
         self.lock = FileLock(os.path.join(path, "lock"))
         # control-file durability: False (default, parity — the reference
-        # never forces its channel) = rename-only process-crash
-        # consistency; True = fsync before every pointer flip
+        # never forces its channel) = no fsync, process-crash
+        # consistency; True = fsync every data file before its pointer
+        # flip and every control file after its in-place write
         self.control_sync = False
         # last next_seq THIS storage object committed — the orphan
         # sweep trigger: when the on-disk pointer differs from it at
@@ -403,32 +449,26 @@ class QueueStorage:
         # pointer never moved (r13 advisor belt; benign if stale — the
         # sweep only removes files at/beyond the new write position)
         self._orphan_suspect = False
-        # persistent ctrl.json fd (r14): the pointer is read on every
-        # push/pop and flipped on every push; per-op open+close pairs
-        # were the dominant syscall cost on this path. Valid for the
-        # life of the queue directory because EVERY ctrl write is an
-        # in-place overwrite of the same inode (initialize() creates
-        # it once by rename; set_next_seq never renames, in either
-        # durability mode) — so a pread through this fd always sees
-        # the latest pointer from any process. Closed by
-        # close_handles().
-        self._ctrl_fd: int | None = None
-        # set once this process has ftruncate'd ctrl.json to the
-        # constant payload length; every later flip writes the same
-        # byte count at offset 0, so the truncate is skipped
-        self._ctrl_sized = False
+        # persistent read/write fds of the two in-place control files,
+        # keyed by path (ctrl.json since r14, consumer.json since the
+        # in-place ack): the pointer is read on every push/pop and
+        # flipped on every push, the ack read and flipped on every pop,
+        # and per-op open+close pairs were the dominant syscall cost on
+        # those paths. Valid for the life of the queue directory because
+        # EVERY write to either file is an in-place overwrite of the same
+        # inode (initialize() creates each once by rename; no later write
+        # renames, in either durability mode) — so a pread through the
+        # fd always sees the latest value from any process. Revalidated
+        # per use and closed by close_handles(); see _control_handle.
+        self._fds: dict[str, int] = {}
+        # memo of the batch-listing parse, ONE tuple replaced as a whole:
+        # (names as listdir returned them, their parsed and sorted
+        # ranges, next_seq of the last committed-view filter, that
+        # filter's result). See _batch_ranges.
+        self._ranges_memo: tuple | None = None
         # codec id to backfill on rows read from pre-codec_id log files
         # (format v1 without the column); set by Queue from meta
         self.default_codec_id: int | None = None
-        # stat-validated parse cache for the per-pop consumer-state
-        # reads: {path: ((mtime_ns, size, ino), parsed)} — consumer.json
-        # updates land via atomic rename (new inode), so a stat
-        # mismatch is a reliable invalidation signal under the flock.
-        # ctrl.json is NOT cached: it is overwritten in place (same
-        # inode, constant length), so a stat key could not tell two
-        # pointer values apart; its payload is ~40 bytes and the
-        # uncached read is noise next to the parquet write
-        self._json_cache: dict[str, tuple[tuple[int, int, int], Any]] = {}
 
     # -- lifecycle -------------------------------------------------------
     def initialize(self, schema: Schema, capacity: int, codec: Codec) -> None:
@@ -443,7 +483,7 @@ class QueueStorage:
         os.makedirs(self.data_dir, exist_ok=True)
         os.makedirs(self.dlq_dir, exist_ok=True)
         write_json_atomic(self.ctrl_path, ctrl_payload(1))
-        write_json_atomic(self.consumer_path, {"acked_seq": 0, "errors": {}})
+        write_json_atomic(self.consumer_path, consumer_payload(0, {}))
         write_json_atomic(
             self.meta_path,
             {
@@ -469,7 +509,8 @@ class QueueStorage:
         so every tear outcome is old-value crc-less, unparseable (->
         repair), or the new format."""
         try:
-            obj = json.loads(os.pread(self._ctrl_handle(), 256, 0))
+            fd, _ = self._control_handle(self.ctrl_path)
+            obj = json.loads(os.pread(fd, 256, 0))
             if "crc" in obj:
                 return
         except (ValueError, KeyError, TypeError):
@@ -477,12 +518,13 @@ class QueueStorage:
         self.set_next_seq(self.next_seq())
 
     def close_handles(self) -> None:
-        """Release the persistent ctrl and lock fds (idempotent).
-        Called by Queue.close/dispose; a process that skips it merely
-        holds two fds until exit — the kernel reclaims both, and a
-        dispose'd directory's orphaned inodes die with them."""
-        fd, self._ctrl_fd = self._ctrl_fd, None
-        if fd is not None:
+        """Release the persistent ctrl, consumer and lock fds
+        (idempotent). Called by Queue.close/dispose; a process that
+        skips it merely holds three fds until exit — the kernel
+        reclaims them, and a dispose'd directory's orphaned inodes die
+        with them."""
+        fds, self._fds = self._fds, {}
+        for fd in fds.values():
             try:
                 os.close(fd)
             except OSError:
@@ -779,59 +821,43 @@ class QueueStorage:
         )
 
     # -- control state ----------------------------------------------------
-    def _read_json_cached(self, path: str) -> Any:
-        st = os.stat(path)
-        key = (st.st_mtime_ns, st.st_size, st.st_ino)
-        cached = self._json_cache.get(path)
-        if cached is not None and cached[0] == key:
-            return cached[1]
-        data = read_json(path)
-        self._json_cache[path] = (key, data)
-        return data
-
-    def _cache_after_write(self, path: str, data: Any) -> None:
-        try:
-            st = os.stat(path)
-        except OSError:
-            self._json_cache.pop(path, None)
-            return
-        self._json_cache[path] = ((st.st_mtime_ns, st.st_size, st.st_ino),
-                                  data)
-
-    def _ctrl_handle(self) -> int:
-        fd = self._ctrl_fd
+    def _control_handle(self, path: str) -> tuple[int, os.stat_result]:
+        """(persistent O_RDWR fd, its fstat) for one in-place control
+        file — the one home of the persistent-fd logic for ctrl.json
+        and consumer.json. Callers hold the flock."""
+        fd = self._fds.get(path)
         if fd is not None:
             # revalidate the inode (r14 review): dispose()+recreate by
-            # another process unlinks ctrl.json — a pinned fd would
+            # another process unlinks the file — a pinned fd would
             # keep reading/writing the orphaned inode while siblings
             # use the new file. One fstat (~1 us) per operation keeps
             # the persistent-fd win while restoring open-by-path's
             # detection of that (out-of-contract, but silent-corrupting)
-            # sequence.
-            if os.fstat(fd).st_nlink:
-                return fd
-            self._ctrl_fd = None
-            self._ctrl_sized = False
+            # sequence; the size it returns sizes the consumer read and
+            # the padding of both writes for free.
+            st = os.fstat(fd)
+            if st.st_nlink:
+                return fd, st
+            del self._fds[path]
             try:
                 os.close(fd)
             except OSError:
                 pass
         # O_RDWR|O_CREAT: readers and writers share one handle; a
-        # missing ctrl.json comes back as an EMPTY read, which the
-        # parse guard routes into _repair_next_seq exactly like
-        # the old FileNotFoundError did
-        self._ctrl_fd = os.open(
-            self.ctrl_path, os.O_RDWR | os.O_CREAT, 0o644
-        )
-        return self._ctrl_fd
+        # missing file comes back as an EMPTY read, which the parse
+        # guards route into _repair_next_seq / _repair_consumer_state
+        # exactly like a torn one
+        fd = os.open(path, os.O_RDWR | os.O_CREAT, 0o644)
+        self._fds[path] = fd
+        return fd, os.fstat(fd)
 
     def next_seq(self) -> int:
         try:
             # pread on the persistent fd (r14): no open/close, no
             # stream object — the pointer payload is ~66 bytes and in
             # the page cache; 256 covers every historical format
-            data = os.pread(self._ctrl_handle(), 256, 0)
-            obj = json.loads(data)
+            fd, _ = self._control_handle(self.ctrl_path)
+            obj = json.loads(os.pread(fd, 256, 0))
             seq_str = obj["next_seq"]
             crc = obj.get("crc")
             if crc is not None and int(crc) != zlib.crc32(
@@ -861,20 +887,23 @@ class QueueStorage:
         regressed seqs carried no data and no acks (the rows never
         hit a published file, so no process observed them); re-issuing
         them re-uses empty gap numbers. acked_seq+1 covers the
-        all-files-vacuumed case."""
+        all-files-vacuumed case; a torn consumer.json counts as 0 here
+        and is left for ``consumer_state`` to repair (the two repairs
+        never call each other: that one reads next_seq, this one only
+        the raw ack)."""
         try:
-            acked = int(read_json(self.consumer_path).get("acked_seq", 0))
-        except (ValueError, KeyError, TypeError, FileNotFoundError):
+            acked = self._read_consumer()[0]
+        except (ValueError, KeyError, TypeError):
             acked = 0
         # RAW view, twice over: (a) the committed view reads next_seq
         # and would recurse right back into this repair; (b) the
         # repair's documented bound deliberately COMMITS an in-flight
         # batch whose pointer flip was lost with the torn ctrl file
-        ends = [
-            e for _, e, _ in self.list_batches(include_uncommitted=True)
-        ]
+        ends = [e for _, e, _ in self._batch_ranges(include_uncommitted=True)]
         n = max([1, acked + 1] + [e + 1 for e in ends])
         self.set_next_seq(n)
+        log.warning("queue %s: ctrl.json was torn or missing; writer "
+                    "pointer repaired to next_seq=%d", self.path, n)
         return n
 
     def set_next_seq(self, n: int) -> None:
@@ -914,34 +943,81 @@ class QueueStorage:
         and upgraded on their next flip.
         """
         payload = json.dumps(ctrl_payload(n)).encode("utf-8")
-        fd = self._ctrl_handle()
-        # honor the short-write contract: os.pwrite may land fewer
-        # bytes (ENOSPC, interruption) and only the return count
-        # says so — looping keeps the single-write atomicity claim
-        # honest rather than leaving a JSON prefix for
-        # _repair_next_seq to mop up (r6 review)
-        done = 0
-        while done < len(payload):
-            done += os.pwrite(fd, payload[done:], done)
-        if not self._ctrl_sized:
-            # constant length makes this a no-op steady-state; it
-            # only trims the tail once per process (migrating an
-            # old-format file, or our first flip)
+        fd, st = self._control_handle(self.ctrl_path)
+        _pwrite_all(fd, payload)
+        if st.st_size > len(payload):
+            # constant length makes this a no-op steady-state; it only
+            # trims an older format's longer tail once
             os.ftruncate(fd, len(payload))
-            self._ctrl_sized = True
         if self.control_sync:
             os.fsync(fd)
         self._last_set_next_seq = n
 
+    def _read_consumer(self) -> tuple[int, dict[str, int]]:
+        """(acked_seq, errors) as stored; ValueError / KeyError /
+        TypeError when the file is torn, empty or fails its crc. The
+        pre-crc format (``{"acked_seq": 3, "errors": {}}``) is accepted
+        as it is; the next ack stamps it."""
+        fd, st = self._control_handle(self.consumer_path)
+        obj = json.loads(os.pread(fd, st.st_size, 0))
+        seq = obj["acked_seq"]
+        errors = dict(obj.get("errors", {}))
+        crc = obj.get("crc")
+        if crc is not None and int(crc) != _consumer_crc(str(seq), errors):
+            raise ValueError("consumer.json checksum mismatch")
+        return int(seq), errors
+
     def consumer_state(self) -> dict[str, Any]:
-        # copy: callers mutate the returned dict before committing it
-        # back via set_consumer_state; the cache must keep the on-disk
-        # value until that commit actually happens
-        data = self._read_json_cached(self.consumer_path)
-        return {"acked_seq": data["acked_seq"],
-                "errors": dict(data.get("errors", {}))}
+        """``{"acked_seq": int, "errors": {seq: count}}`` — a fresh dict
+        each call (callers mutate it before committing it back through
+        ``set_consumer_state``)."""
+        try:
+            acked, errors = self._read_consumer()
+        except (ValueError, KeyError, TypeError):
+            return self._repair_consumer_state()
+        return {"acked_seq": acked, "errors": errors}
+
+    def _repair_consumer_state(self) -> dict[str, Any]:
+        """Rebuild a torn consumer.json at a safe LOWER bound of the
+        lost ack: one below the first batch file on disk (no stored row
+        lies below it), never above ``next_seq - 1``, with the error
+        counts reset. Redelivering already-acked rows is legal under
+        at-least-once; skipping a stored row is not, which rules out
+        any guess above the first file. A pending compaction commit is
+        finished first, so rows that exist only as staged files are
+        listed under their final names. The RAW listing keeps the
+        bound off the committed filter; ``next_seq()`` may repair
+        ctrl.json, which reads the ack without repairing it."""
+        with self.lock:  # re-entrant: free when the caller holds it
+            self.replay_pending_compaction()
+            ranges = self._batch_ranges(include_uncommitted=True)
+            bound = self.next_seq() - 1
+            if ranges:
+                bound = min(bound, ranges[0][0] - 1)
+            bound = max(0, bound)
+            self.set_consumer_state({"acked_seq": bound, "errors": {}})
+        log.warning("queue %s: consumer.json was torn or missing; ack "
+                    "repaired to acked_seq=%d (rows above it are "
+                    "redelivered, error counts reset)", self.path, bound)
+        return {"acked_seq": bound, "errors": {}}
 
     def set_consumer_state(self, state: dict[str, Any]) -> None:
+        """Flip the consumer ack: ONE pwrite at offset 0 through the
+        persistent fd, plus one ``fsync`` of the file in
+        ``control_sync`` mode — no temp file, no rename, and so no
+        directory fsync (no directory entry changes), the same
+        in-place discipline as ``set_next_seq``. A rename per pop cost
+        a new inode and a directory update on every ack, and would
+        orphan every sibling's persistent fd.
+
+        The payload length follows the errors map, so it is padded
+        with spaces to at least the file's current length: a shorter
+        state never leaves a stale tail, and the hot path never
+        truncates. Process crash cannot tear the single write. A
+        power-loss tear mixes old and new bytes; the crc32 over the
+        digits and the errors map (``consumer_payload``) turns every
+        such mix that parses into a checksum failure, and
+        ``consumer_state`` repairs it at a safe lower bound."""
         # prune error counters the ack pointer has passed (r16
         # review): a failing record whose TTL lapsed gets vacuumed by
         # compaction, the consumer gap-jumps over its seq, and its
@@ -951,13 +1027,17 @@ class QueueStorage:
         # (consume only counts errors on the un-acked head), so this
         # drops exactly the garbage.
         acked = int(state["acked_seq"])
-        errors = state.get("errors")
-        if errors:
-            stale = [k for k in errors if int(k) <= acked]
-            for k in stale:
-                del errors[k]
-        write_json_atomic(self.consumer_path, state, sync=self.control_sync)
-        self._cache_after_write(self.consumer_path, state)
+        errors = state.get("errors") or {}
+        stale = [k for k in errors if int(k) <= acked]
+        for k in stale:
+            del errors[k]
+        payload = json.dumps(consumer_payload(acked, errors)).encode("utf-8")
+        fd, st = self._control_handle(self.consumer_path)
+        if len(payload) < st.st_size:
+            payload += b" " * (st.st_size - len(payload))
+        _pwrite_all(fd, payload)
+        if self.control_sync:
+            os.fsync(fd)
 
     # -- data files ---------------------------------------------------------
     def batch_path(self, start: int, end: int) -> str:
@@ -967,16 +1047,23 @@ class QueueStorage:
 
     def _batch_ranges(
         self, include_uncommitted: bool = False
-    ) -> list[tuple[int, int, str]]:
+    ) -> tuple[tuple[int, int, str], ...]:
         """All (start_seq, end_seq, file NAME), sorted by start — no
-        paths built. The single-record pop fast path lists on every
-        call (a fresh listdir is the cross-process visibility
-        guarantee: a memoized listing keyed on directory mtime can go
-        permanently stale when another process's write lands in the
-        same timestamp tick, so we deliberately pay the listdir), but
-        joining a full path for EVERY file when the caller touches one
-        was a third of pop's profile — paths are now joined lazily at
-        the point of use (r9).
+        paths built; paths are joined lazily at the point of use (r9).
+
+        Every call lists the directory afresh: a fresh listdir is the
+        cross-process visibility guarantee (a listing memoized on the
+        directory's mtime can go permanently stale when another
+        process's write lands in the same timestamp tick). What is
+        memoized is the PARSE: the sorted ranges are a pure function of
+        the exact name list listdir returned, and the committed view a
+        pure function of those ranges and ``next_seq`` — so a changed
+        directory or a moved pointer simply misses the memo, and an
+        unchanged one skips the per-name regex match and the sort that
+        dominated the single-record pop (645k ``re.match`` calls in one
+        profiled 2,781-pop drain). The memo is one tuple replaced
+        whole, and the result is an immutable tuple that callers may
+        keep but never mutate.
 
         COMMITTED view by default: a committed batch always has
         ``end < next_seq`` (the pointer flips before the rename
@@ -997,23 +1084,33 @@ class QueueStorage:
             # past them forever (r17; judge repro r16). One stat() on
             # the no-manifest path; see replay_pending_compaction.
             self.replay_pending_compaction()
-        out: list[tuple[int, int, str]] = []
         if not os.path.isdir(self.data_dir):
-            return out
-        for name in os.listdir(self.data_dir):
-            m = _BATCH_RE.match(name)
-            if m:
-                out.append((int(m.group(1)), int(m.group(2)), name))
-        out.sort()
-        if out and not include_uncommitted:
-            ceiling = self.next_seq()
-            kept = [b for b in out if b[1] < ceiling]
-            if len(kept) != len(out):
-                # a file at/beyond the pointer exists — arm the
-                # pre-commit sweep (see _orphan_suspect)
-                self._orphan_suspect = True
-            out = kept
-        return out
+            return ()
+        names = os.listdir(self.data_dir)
+        memo = self._ranges_memo
+        if memo is None or memo[0] != names:
+            parsed = []
+            for name in names:
+                m = _BATCH_RE.match(name)
+                if m:
+                    parsed.append((int(m.group(1)), int(m.group(2)), name))
+            parsed.sort()
+            memo = (names, tuple(parsed), None, None)
+            self._ranges_memo = memo
+        ranges = memo[1]
+        if include_uncommitted or not ranges:
+            return ranges
+        ceiling = self.next_seq()
+        if memo[2] == ceiling:
+            kept = memo[3]
+        else:
+            kept = tuple(b for b in ranges if b[1] < ceiling)
+            self._ranges_memo = (memo[0], ranges, ceiling, kept)
+        if len(kept) != len(ranges):
+            # a file at/beyond the pointer exists — arm the
+            # pre-commit sweep (see _orphan_suspect)
+            self._orphan_suspect = True
+        return kept
 
     def list_batches(
         self, include_uncommitted: bool = False
@@ -1282,27 +1379,35 @@ class QueueStorage:
     _CACHE_MAX_ROWS = 262_144
     _CACHE_MAX_BYTES = 256 << 20
 
-    def _cacheable(self, start: int, end: int, path: str) -> bool:
+    def _cacheable(self, start: int, end: int,
+                   path: str) -> os.stat_result | None:
+        """The file's stat when its rows may go through the row cache
+        (below both caps), else None. The one stat also keys the cache
+        (``_cached_rows``), so a cached pop stats the file once."""
         if end - start + 1 > self._CACHE_MAX_ROWS:
-            return False
+            return None
         try:
-            return os.path.getsize(path) <= self._CACHE_MAX_BYTES
+            st = os.stat(path)
         except OSError:
-            return False
+            return None
+        return st if st.st_size <= self._CACHE_MAX_BYTES else None
 
     def read_seq(self, seq: int) -> dict[str, Any] | None:
-        """Point lookup by seq using filename range pruning."""
-        for start, end, name in self._batch_ranges():
-            if start <= seq <= end:
-                path = os.path.join(self.data_dir, name)
-                if self._cacheable(start, end, path):
-                    rows = self._cached_rows(path)
-                    return rows.get(seq)
-                table = pq.read_table(path, filters=[("seq", "==", seq)])
-                found = table.to_pylist()
-                self._backfill_rows(found)
-                return found[0] if found else None
-        return None
+        """Point lookup by seq using filename range pruning: bisect the
+        sorted starts for the last file starting at or below ``seq``."""
+        ranges = self._batch_ranges()
+        i = bisect.bisect_left(ranges, (seq + 1,)) - 1
+        if i < 0 or ranges[i][1] < seq:
+            return None
+        start, end, name = ranges[i]
+        path = os.path.join(self.data_dir, name)
+        st = self._cacheable(start, end, path)
+        if st is not None:
+            return self._cached_rows(path, st).get(seq)
+        table = pq.read_table(path, filters=[("seq", "==", seq)])
+        found = table.to_pylist()
+        self._backfill_rows(found)
+        return found[0] if found else None
 
     def drop_row_cache(self) -> None:
         self._row_cache = None
@@ -1311,8 +1416,9 @@ class QueueStorage:
         """Smallest stored seq > after (compaction may vacuum expired
         rows, leaving gaps in the sequence)."""
         for start, end, path in self.batches_after(after):
-            if self._cacheable(start, end, path):
-                rows = self._cached_rows(path)
+            st = self._cacheable(start, end, path)
+            if st is not None:
+                rows = self._cached_rows(path, st)
                 candidates = [s for s in rows if s > after]
                 if candidates:
                     return min(candidates)
@@ -1326,16 +1432,16 @@ class QueueStorage:
                     return min(seqs)
         return None
 
-    def _cached_rows(self, path: str) -> dict[int, dict[str, Any]]:
-        # (mtime_ns, size, ino) key, same strength as
-        # _read_json_cached (r16 review): compaction may legally
-        # replace a batch file under the SAME name with fewer rows,
-        # and drop_row_cache only clears the compacting process's own
-        # cache — a sibling keyed on the float mtime alone could
-        # collide within a timestamp tick and keep serving vacuumed
-        # rows. The rename always allocates a new inode, so st_ino
-        # breaks the tie even when mtime and size both collide.
-        st = os.stat(path)
+    def _cached_rows(self, path: str,
+                     st: os.stat_result) -> dict[int, dict[str, Any]]:
+        # (mtime_ns, size, ino) key of the caller's stat of ``path``
+        # (r16 review): compaction may legally replace a batch file
+        # under the SAME name with fewer rows, and drop_row_cache only
+        # clears the compacting process's own cache — a sibling keyed
+        # on the float mtime alone could collide within a timestamp
+        # tick and keep serving vacuumed rows. The rename always
+        # allocates a new inode, so st_ino breaks the tie even when
+        # mtime and size both collide.
         key = (path, st.st_mtime_ns, st.st_size, st.st_ino)
         cached = getattr(self, "_row_cache", None) or None
         if cached is not None and cached[0] == key:

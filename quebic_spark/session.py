@@ -148,6 +148,17 @@ def restore_session_tuning(spark: SparkSession) -> SparkSession:
 
 _SCHEMA_MEMO: dict = {}
 
+
+def _memo_put(memo: dict, key: tuple, value) -> None:
+    """Insert into an (applicationId, ...)-keyed memo, first evicting
+    every entry of an EARLIER application: a finished application's
+    keys can never hit again, and without eviction they accumulated
+    for the life of the driver process."""
+    app = key[0]
+    for k in [k for k in memo if k[0] != app]:
+        del memo[k]
+    memo[key] = value
+
 # confs that change what schema parquet footer inference produces for
 # the SAME bytes (r21, ADVICE r20): a first read under one value must
 # not hand its inferred schema to a later read under another — e.g.
@@ -177,7 +188,13 @@ def read_immutable_parquet(spark: SparkSession, path: str):
     """``spark.read.parquet(path)`` with per-(application, path,
     inference-confs) schema reuse — skips repeated footer-based schema
     inference for the immutable input tables operators read during
-    query construction."""
+    query construction.
+
+    Immutability of ``path`` is load-bearing for correctness: nothing
+    checks the files, so a path rewritten with a different schema
+    within one application is read under the memoized (stale) schema.
+    Rewrite in place only through ``spark.read`` directly. Entries of
+    earlier applications are evicted on insert."""
     try:
         key = (spark.sparkContext.applicationId, path,
                _schema_conf_sig(spark))
@@ -186,7 +203,7 @@ def read_immutable_parquet(spark: SparkSession, path: str):
     schema = _SCHEMA_MEMO.get(key)
     if schema is None:
         df = spark.read.parquet(path)
-        _SCHEMA_MEMO[key] = df.schema
+        _memo_put(_SCHEMA_MEMO, key, df.schema)
         return df
     return spark.read.schema(schema).parquet(path)
 
@@ -240,7 +257,12 @@ def local_rows_frame(spark: SparkSession, rows, schema):
 def immutable_parquet_count(spark: SparkSession, path: str) -> int:
     """Row count of an immutable parquet path, memoized per
     (applicationId, path). The first call runs the parquet-footer
-    count job; later calls in the same application are a dict hit."""
+    count job; later calls in the same application are a dict hit.
+
+    Immutability of ``path`` is load-bearing for correctness: nothing
+    checks the files, so a path rewritten within one application
+    returns the count of its FIRST contents. Entries of earlier
+    applications are evicted on insert."""
     try:
         key = (spark.sparkContext.applicationId, path)
     except Exception:
@@ -248,5 +270,5 @@ def immutable_parquet_count(spark: SparkSession, path: str) -> int:
     n = _COUNT_MEMO.get(key)
     if n is None:
         n = read_immutable_parquet(spark, path).count()
-        _COUNT_MEMO[key] = n
+        _memo_put(_COUNT_MEMO, key, n)
     return int(n)

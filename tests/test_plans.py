@@ -644,3 +644,35 @@ def test_read_immutable_parquet_memoizes_schema_only(spark, sf_dir):
             spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
         else:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
+
+
+def test_immutable_memos_evict_earlier_applications(monkeypatch):
+    """Both (applicationId, path)-keyed memos drop every entry of an
+    earlier application when a later application inserts: those keys
+    can never hit again. Driven with stand-in sessions, no JVM."""
+    from types import SimpleNamespace
+
+    from quebic_spark import session as sess
+
+    monkeypatch.setattr(sess, "_SCHEMA_MEMO", {})
+    monkeypatch.setattr(sess, "_COUNT_MEMO", {})
+
+    def fake_spark(app_id):
+        read = SimpleNamespace(parquet=lambda path: SimpleNamespace(
+            schema=f"schema-of-{path}", count=lambda: 42))
+        read.schema = lambda schema: read
+        return SimpleNamespace(
+            sparkContext=SimpleNamespace(applicationId=app_id),
+            conf=SimpleNamespace(get=lambda key, default=None: default),
+            read=read,
+        )
+
+    old, new = fake_spark("app-old"), fake_spark("app-new")
+    sess.read_immutable_parquet(old, "/t/a")
+    assert sess.immutable_parquet_count(old, "/t/a") == 42
+    assert {k[0] for k in sess._SCHEMA_MEMO} == {"app-old"}
+    assert {k[0] for k in sess._COUNT_MEMO} == {"app-old"}
+    sess.read_immutable_parquet(new, "/t/b")
+    assert sess.immutable_parquet_count(new, "/t/b") == 42
+    assert [k[:2] for k in sess._SCHEMA_MEMO] == [("app-new", "/t/b")]
+    assert list(sess._COUNT_MEMO) == [("app-new", "/t/b")]

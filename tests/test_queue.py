@@ -1746,7 +1746,9 @@ def test_fsync_mode_dlq_before_ack(qpath, monkeypatch):
     "DLQ = recoverable superset of the reference's silent discard"
     contract in the one mode that promises power-loss durability.
     Pinned ORDER via the /proc/self/fd spy: dlq data -> dlq/ dir ->
-    consumer.json -> its directory entry."""
+    consumer.json. The ack is an in-place write on one inode, so no
+    directory entry changes and there is no directory to sync after
+    it."""
     import os as _os
 
     import quebic_spark.queue.storage as storage_mod
@@ -1783,7 +1785,7 @@ def test_fsync_mode_dlq_before_ack(qpath, monkeypatch):
         else p
         for p in synced
     ]
-    assert labeled == ["dlqdata", "dlqdir", "consumer", "rootdir"], labeled
+    assert labeled == ["dlqdata", "dlqdir", "consumer"], labeled
     import pyarrow.parquet as _pq
 
     dlq_files = sorted(_os.listdir(q._storage.dlq_dir))
@@ -2681,3 +2683,283 @@ def test_fsync_mode_dlq_replay_shrink_power_loss_ordering(tmp_path):
     assert sorted(second) == [3, 4, 5], second
     q.verify()
     q.dispose()
+
+
+# --------------------------------------------------------------------------
+# In-place consumer ack and the memoized batch-listing parse
+
+
+def _release_without_compaction(q):
+    """Drop a queue without close()'s final compaction, so its files
+    stay exactly as the test laid them out."""
+    q._closed = True
+    q._storage.close_handles()
+
+
+def test_pop_acks_in_place_on_one_inode(qpath, monkeypatch):
+    """Every ack is one in-place write: over 100 pops consumer.json
+    keeps its inode and no consumer.json.tmp is ever created (the
+    rename-based ack created and renamed one per pop)."""
+    import os as _os
+
+    q = Queue(qpath, SCHEMA, capacity=1000, auto_compact_files=None)
+    pub = q.publisher()
+    for i in range(100):
+        pub.push([i, f"v{i}"])
+    cpath = _os.path.join(qpath, "consumer.json")
+    ino = _os.stat(cpath).st_ino
+    opened = []
+    real_open = _os.open
+
+    def spy(path, *a, **kw):
+        opened.append(str(path))
+        return real_open(path, *a, **kw)
+
+    monkeypatch.setattr(_os, "open", spy)
+    sub = q.subscriber()
+    for i in range(100):
+        assert sub.try_pop() == (i, f"v{i}")
+        assert _os.stat(cpath).st_ino == ino
+    monkeypatch.setattr(_os, "open", real_open)
+    assert not [p for p in opened if p.endswith("consumer.json.tmp")]
+    assert q._storage.consumer_state() == {"acked_seq": 100, "errors": {}}
+    q.close()
+
+
+def _stored_consumer(qpath):
+    import json as _json
+
+    with open(qpath + "/consumer.json") as f:
+        return _json.load(f)
+
+
+@pytest.mark.parametrize("tear", ["bad_crc", "truncated"])
+def test_torn_consumer_json_redelivers_from_lower_bound(qpath, caplog, tear):
+    """A torn ack (power loss mid pwrite) either fails its crc or does
+    not parse. Reopen must repair it to one below the first batch file
+    — redelivering acked rows is legal, skipping a stored row is not —
+    reset the error counts, and log exactly one warning."""
+    import json as _json
+    import logging
+
+    q = Queue(qpath, SCHEMA, capacity=100, auto_compact_files=None)
+    pub = q.publisher()
+    for i in range(10):
+        pub.push([i, f"v{i}"])
+    sub = q.subscriber()
+    assert [r[0] for r in sub.pop_n(4)] == [0, 1, 2, 3]
+    q.compact()  # drops the fully acked files: first file starts at 5
+    assert [r[0] for r in sub.pop_n(2)] == [4, 5]  # acked_seq 6
+    _release_without_compaction(q)
+    good = _stored_consumer(qpath)
+    assert int(good["acked_seq"]) == 6
+    with open(qpath + "/consumer.json", "w") as f:
+        if tear == "bad_crc":
+            # digits moved FORWARD past two un-acked rows, stale crc:
+            # accepted, this would silently skip seqs 7 and 8
+            _json.dump({"acked_seq": f"{8:020d}", "errors": {},
+                        "crc": good["crc"]}, f)
+        else:
+            f.write(_json.dumps(good)[:23])
+    caplog.set_level(logging.WARNING, logger="quebic_spark.queue.storage")
+    q2 = Queue(qpath, SCHEMA, auto_compact_files=None)
+    got = [r[0] for r in q2.subscriber().pop_n(100)]
+    assert got == [4, 5, 6, 7, 8, 9]  # 4, 5 redelivered, nothing lost
+    warnings = [r for r in caplog.records if "consumer.json" in r.message]
+    assert len(warnings) == 1, [r.message for r in caplog.records]
+    assert "acked_seq=4" in warnings[0].message
+    q2.verify()
+    q2.close()
+    stored = _stored_consumer(qpath)
+    assert int(stored["acked_seq"]) == 10 and "crc" in stored
+
+
+def test_torn_consumer_json_after_full_drain(qpath):
+    """A drained queue keeps only the file holding its latest row
+    (latest-survives-empty), so a torn ack redelivers that one row and
+    re-issues no seq. With no batch file at all the bound is
+    next_seq - 1 and nothing is redelivered."""
+    import os as _os
+
+    q = Queue(qpath, SCHEMA, capacity=100)
+    q.publisher().push_all([[i, f"v{i}"] for i in range(3)])
+    assert len(q.subscriber().pop_n(3)) == 3
+    q.close()  # final compaction keeps only seq 3, the latest row
+    with open(qpath + "/consumer.json", "w") as f:
+        f.write('{"acked_seq": "0000')
+    q2 = Queue(qpath, SCHEMA)
+    assert q2.size() == 1
+    assert q2.publisher().push([7, "x"])
+    assert q2.subscriber().pop_n(5) == [(2, "v2"), (7, "x")]
+    q2.close()
+    for name in _os.listdir(qpath + "/data"):
+        _os.remove(_os.path.join(qpath, "data", name))
+    with open(qpath + "/consumer.json", "w") as f:
+        f.write("")
+    q3 = Queue(qpath, SCHEMA)
+    assert q3.size() == 0
+    assert q3.publisher().push([8, "y"])
+    assert q3.subscriber().try_pop() == (8, "y")
+    q3.close()
+
+
+def test_legacy_consumer_json_honoured_and_stamped_by_next_ack(qpath):
+    """The crc-less format earlier versions wrote is read as it is and
+    rewritten in the crc format by the next ack."""
+    import json as _json
+    import zlib as _zlib
+
+    q = Queue(qpath, SCHEMA, capacity=100, auto_compact_files=None)
+    q.publisher().push_all([[i, f"v{i}"] for i in range(6)])
+    _release_without_compaction(q)
+    with open(qpath + "/consumer.json", "w") as f:
+        _json.dump({"acked_seq": 3, "errors": {}}, f)
+    q2 = Queue(qpath, SCHEMA, auto_compact_files=None)
+    assert q2.size() == 3
+    assert q2.subscriber().try_pop() == (3, "v3")
+    stored = _stored_consumer(qpath)
+    assert stored["acked_seq"] == f"{4:020d}"
+    assert int(stored["crc"]) == _zlib.crc32(
+        (stored["acked_seq"] + _json.dumps({}, sort_keys=True)).encode()
+    )
+    q2.close()
+
+
+def test_shorter_ack_pads_over_a_longer_one(qpath):
+    """The ack is not constant-length (the errors map varies): a
+    shorter state is space-padded over the longer file, so no stale
+    tail survives and the file never needs truncating."""
+    import os as _os
+
+    q = Queue(qpath, SCHEMA, capacity=100, auto_compact_files=None)
+    q.publisher().push_all([[1, "a"], [2, "b"]])
+    sub = q.subscriber()
+
+    def boom(_record):
+        raise RuntimeError("fail")
+
+    with pytest.raises(RuntimeError):
+        sub.consume(boom, error_permit=3)
+    cpath = _os.path.join(qpath, "consumer.json")
+    long_size = _os.path.getsize(cpath)
+    assert q._storage.consumer_state()["errors"] == {"1": 1}
+    assert sub.try_pop() == (1, "a")  # prunes the entry: shorter JSON
+    assert _os.path.getsize(cpath) == long_size
+    with open(cpath, "rb") as f:
+        raw = f.read()
+    assert raw.endswith(b" ")
+    assert q._storage.consumer_state() == {"acked_seq": 1, "errors": {}}
+    q.close()
+
+
+def test_sibling_ack_and_compaction_visible_through_memo_and_fd(qpath):
+    """Two storages on one directory: acks and compactions of the
+    second are seen by the first between its calls — through its
+    persistent consumer fd, and through a changed name list that
+    misses its listing memo."""
+    q1 = Queue(qpath, SCHEMA, capacity=100, auto_compact_files=None)
+    pub = q1.publisher()
+    for i in range(8):
+        pub.push([i, f"v{i}"])
+    sub1 = q1.subscriber()
+    assert sub1.try_pop() == (0, "v0")  # fd open, memo populated
+    q2 = Queue(qpath, SCHEMA, auto_compact_files=None)
+    sub2 = q2.subscriber()
+    assert sub2.try_pop() == (1, "v1")  # sibling ack
+    assert q1.size() == 6
+    assert sub1.try_pop() == (2, "v2")
+    names_before = q1._storage._ranges_memo[0]
+    q2.compact()  # sibling drops consumed files: names change
+    assert q2._storage.consumer_state()["acked_seq"] == 3
+    assert sub1.try_pop() == (3, "v3")
+    assert q1._storage._ranges_memo[0] != names_before
+    q2.publisher().push([100, "late"])  # sibling push: a new name
+    assert [r[0] for r in sub1.pop_n(10)] == [4, 5, 6, 7, 100]
+    assert q2._storage.consumer_state() == q1._storage.consumer_state()
+    q2.close()
+    q1.verify()
+    q1.close()
+
+
+def test_batch_listing_parse_is_memoized(qpath, monkeypatch):
+    """_batch_ranges lists the directory on every call but parses a
+    name list it has seen before from the memo: a second call over an
+    unchanged directory runs no _BATCH_RE.match. A changed list or a
+    moved pointer misses the memo, and the committed filter still arms
+    the orphan sweep."""
+    import quebic_spark.queue.storage as storage_mod
+
+    q = Queue(qpath, SCHEMA, capacity=100, auto_compact_files=None)
+    pub = q.publisher()
+    for i in range(5):
+        pub.push([i, f"v{i}"])
+    st = q._storage
+    real = storage_mod._BATCH_RE
+    calls = []
+
+    class CountingRe:
+        def match(self, name):
+            calls.append(name)
+            return real.match(name)
+
+    monkeypatch.setattr(storage_mod, "_BATCH_RE", CountingRe())
+    first = st._batch_ranges()
+    assert len(first) == 5 and calls
+    calls.clear()
+    second = st._batch_ranges()
+    assert calls == [] and second == first
+    assert isinstance(second, tuple)  # shared, so never a mutable list
+    assert st._batch_ranges(include_uncommitted=True) == first
+    assert calls == []
+    # a moved pointer re-filters the same parse: the last file is now
+    # at/beyond next_seq, hidden, and the sweep is armed
+    st.set_next_seq(5)
+    st._orphan_suspect = False
+    assert [r[0] for r in st._batch_ranges()] == [1, 2, 3, 4]
+    assert calls == [] and st._orphan_suspect
+    st.set_next_seq(6)
+    pub.push([5, "v5"])  # a new name: the memo misses
+    assert [r[0] for r in st._batch_ranges()] == [1, 2, 3, 4, 5, 6]
+    assert calls
+    q.close()
+
+
+def test_torn_ctrl_json_logs_repaired_pointer(qpath, caplog):
+    """A ctrl.json repair is a crash-recovery action an operator must
+    see: it logs the repaired value."""
+    import logging
+
+    q = Queue(qpath, SCHEMA, capacity=100)
+    q.publisher().push_all([[i, f"v{i}"] for i in range(5)])
+    q.close()
+    with open(qpath + "/ctrl.json", "w") as f:
+        f.write('{"next_se')
+    caplog.set_level(logging.WARNING, logger="quebic_spark.queue.storage")
+    q2 = Queue(qpath, SCHEMA)
+    assert q2.size() == 5
+    warnings = [r.message for r in caplog.records
+                if "ctrl.json" in r.message]
+    assert len(warnings) == 1 and "next_seq=6" in warnings[0], warnings
+    q2.close()
+
+
+def test_open_logs_recovery_sweep(qpath, caplog):
+    """Queue open logs every path crash recovery touched instead of
+    dropping recover()'s return value."""
+    import logging
+    import os as _os
+
+    q = Queue(qpath, SCHEMA, capacity=100)
+    q.publisher().push([1, "a"])
+    q.close()
+    debris = _os.path.join(qpath, "data", "batch-x.parquet.tmp")
+    open(debris, "w").close()
+    caplog.set_level(logging.WARNING, logger="quebic_spark.queue.queue")
+    q2 = Queue(qpath, SCHEMA)
+    assert not _os.path.exists(debris)
+    msgs = [r.message for r in caplog.records if "recovery" in r.message]
+    assert len(msgs) == 1 and debris in msgs[0], msgs
+    caplog.clear()
+    q2.close()
+    Queue(qpath, SCHEMA).close()  # clean reopen: nothing to report
+    assert not [r for r in caplog.records if "recovery" in r.message]
