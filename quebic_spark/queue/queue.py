@@ -53,6 +53,7 @@ from quebic_spark.queue.storage import (
     large_offset_schema,
     read_log_file,
     spark_ddl,
+    staged_seq_ranges,
     write_json_atomic,
 )
 from quebic_spark.schema import Schema
@@ -60,6 +61,37 @@ from quebic_spark.schema import Schema
 # The reference polls every 200 ms in every blocking loop
 # (Queue.scala:190,220,281). Configurable here; same default.
 DEFAULT_POLL_INTERVAL = 0.2
+
+# Bulk frames expected to hold at most this many rows go through one
+# partition: ``append_dataframe``'s single-reducer seq window and the
+# streaming consumer's one-partition micro-batch sort (see
+# ``fits_one_partition``).
+SMALL_BATCH_ROWS = 1_000_000
+
+
+def estimated_rows(df) -> int:
+    """Rows Catalyst expects ``df`` to produce, read from its optimized
+    plan's statistics without running a Spark job: the exact
+    ``rowCount`` where Spark knows it (local relations, ``range``, a
+    materialised cache), else ``sizeInBytes`` over the schema's
+    per-row size (Spark's own 8-byte row overhead plus each column's
+    default size). File scans report their on-disk bytes, so the
+    estimate for compressed input runs low; a plan Spark cannot size
+    (an RDD-backed ``createDataFrame`` of a Python list) reports the
+    maximum size and so estimates huge."""
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    rows = stats.rowCount()
+    if rows.isDefined():
+        return int(str(rows.get()))
+    per_row = 8 + df._jdf.schema().defaultSize()
+    return int(str(stats.sizeInBytes())) // per_row
+
+
+def fits_one_partition(df, cutoff: int = SMALL_BATCH_ROWS) -> bool:
+    """Whether ``df`` is small enough to order in one partition: its
+    ``estimated_rows`` are at most ``cutoff``. ``cutoff=0`` says no
+    for every frame."""
+    return cutoff > 0 and estimated_rows(df) <= cutoff
 
 
 def _now_ms() -> int:
@@ -1291,7 +1323,7 @@ class Queue:
 
     def append_dataframe(self, df, order_by: Sequence[str],
                          lifetime_ms: int = -1,
-                         small_batch_rows: int = 1_000_000,
+                         small_batch_rows: int = SMALL_BATCH_ROWS,
                          durable: bool | None = None,
                          staged_hook: Callable[[int], None]
                          | None = None) -> int:
@@ -1312,16 +1344,24 @@ class Queue:
         the classic scalable global row-number. At or below the cutoff
         a single-reducer global window is cheaper than the extra jobs
         (this is the source of Spark's "WindowExec: No Partition
-        Defined" warning — expected, and bounded by the cutoff). Pass
+        Defined" warning — expected, and bounded by the cutoff). The
+        path is chosen without running a job, from the row count
+        Catalyst's statistics give for ``df`` (``estimated_rows``: the
+        exact count where Spark knows it, else a size-based estimate;
+        a frame Spark cannot size takes the scalable path). Pass
         ``small_batch_rows=0`` to force the scalable path.
 
-        The committed row count and ``next_seq`` are derived from the
-        STAGED output, not from a pre-write ``df.count()`` — a
-        nondeterministic source (sample/rand/shuffle-dependent input)
-        may change cardinality between evaluations, and trusting the
-        stale count would truncate or gap the log. The pre-write count
-        only selects the path and pre-checks capacity; capacity is
-        enforced again on the staged rows before any file is committed.
+        The only Spark action is the staged write itself (the
+        scalable path adds its partition-count aggregation). The
+        committed row count and ``next_seq`` come from the STAGED
+        output's Parquet footers, never from a separate evaluation of
+        ``df`` — a nondeterministic source (sample/rand/shuffle-
+        dependent input) may change cardinality between evaluations.
+        The staged parts must tile one contiguous seq range or the call
+        fails with nothing published. Capacity is enforced on the
+        staged rows, before any file is committed; an over-capacity
+        call still pays for its write. Zero staged rows return 0 with
+        nothing published and no ``staged_hook`` call.
 
         Crash semantics: the ingest is NOT atomic. In the default
         mode the pointer flips before the parts publish (ascending
@@ -1349,7 +1389,7 @@ class Queue:
         prove, from the pointer alone, whether a crashed call's commit
         happened (``queue_sink``'s provable replay attribution). Runs
         under the queue flock; exceptions abort the ingest with
-        nothing published.
+        nothing published. Not called when zero rows are staged.
         """
         if durable is None or durable == self._storage.control_sync:
             return self._append_dataframe_impl(
@@ -1399,18 +1439,12 @@ class Queue:
                 f"order_by keys; extras={extra_srcs}, "
                 f"order_by={list(order_by)})"
             )
-        n = df.count()
-        if n == 0:
-            return 0
+        one_partition = fits_one_partition(df, small_batch_rows)
         with self._storage.lock:
             start = self._storage.next_seq()
             pushed = start - 1
             acked = int(self._storage.consumer_state()["acked_seq"])
             room = self.capacity - (pushed - acked)
-            if room < n:
-                raise ValueError(
-                    f"capacity exceeded: {n} rows, room {room}"
-                )
             now = _now_ms()
             exp = _expires_at(lifetime_ms)
             # rename payload positionally to c0..cN first; order keys
@@ -1434,7 +1468,7 @@ class Queue:
                 F.lit(self.codec.id).cast("int").alias("codec_id"),
             ]
             parts = None
-            if n <= small_batch_rows:
+            if one_partition:
                 # small batch: a single-reducer global window is cheaper
                 # than the extra jobs of the scalable path
                 w = Window.orderBy(*order_cols)
@@ -1504,24 +1538,18 @@ class Queue:
                     parts.unpersist()
             # commit: move part files into the log with their seq ranges.
             # The staged output is the source of truth for how many rows
-            # were actually written — re-check capacity against it, and
-            # only then rename anything (abort = rmtree, nothing leaks).
-            part_files = sorted(
-                os.path.join(staging, f)
-                for f in os.listdir(staging)
-                if f.endswith(".parquet")
-            )
-            ranges: list[tuple[str, int, int]] = []
-            actual = 0
-            for part in part_files:
-                meta = pq.read_table(part, columns=["seq"])
-                seqs = meta.column("seq").to_pylist()
-                if not seqs:
-                    continue
-                ranges.append((part, min(seqs), max(seqs)))
-                actual += len(seqs)
-            if actual > room:
+            # were actually written — check its tiling and capacity
+            # against it, and only then rename anything (abort = rmtree,
+            # nothing leaks).
+            try:
+                ranges, actual = staged_seq_ranges(staging, start)
+            except BaseException:
                 shutil.rmtree(staging, ignore_errors=True)
+                raise
+            if actual == 0 or actual > room:
+                shutil.rmtree(staging, ignore_errors=True)
+                if actual == 0:
+                    return 0
                 raise ValueError(
                     f"capacity exceeded: {actual} rows staged, room {room}"
                 )

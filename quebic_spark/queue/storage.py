@@ -200,6 +200,98 @@ def read_log_file(path: str, columns: list[str] | None = None) -> pa.Table:
         return pf.read(columns=columns, use_threads=False)
 
 
+def _leaf_index(meta, column: str) -> int | None:
+    """Index of top-level ``column`` among a footer's column chunks."""
+    if meta.num_row_groups == 0:
+        return None
+    rg0 = meta.row_group(0)
+    for j in range(rg0.num_columns):
+        if rg0.column(j).path_in_schema == column:
+            return j
+    return None
+
+
+def footer_counts(
+    path: str, column: str | None = "seq"
+) -> tuple[int, int | None, int | None]:
+    """``(num_rows, min, max)`` of one Parquet file, read from its
+    footer: the row count from the file metadata and the min/max of
+    the integer ``column`` from its row-group statistics, so counting
+    a written part costs one footer read, not a column scan. When any
+    non-empty row group lacks min/max statistics for ``column`` (a
+    writer may skip them), the one column is read instead.
+    ``column=None`` returns the row count only; an empty file, or a
+    file without ``column``, gives ``None`` for both bounds."""
+    with pq.ParquetFile(path) as pf:
+        meta = pf.metadata
+        n = meta.num_rows
+        leaf = None if column is None or n == 0 else _leaf_index(meta,
+                                                                 column)
+        if leaf is None:
+            return n, None, None
+        lo = hi = None
+        for g in range(meta.num_row_groups):
+            rg = meta.row_group(g)
+            if rg.num_rows == 0:
+                continue
+            st = rg.column(leaf).statistics
+            if st is None or not st.has_min_max:
+                break
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+        else:
+            return n, lo, hi
+        col = pf.read(columns=[column], use_threads=False).column(0)
+    import pyarrow.compute as pc
+
+    mm = pc.min_max(col)
+    return n, mm["min"].as_py(), mm["max"].as_py()
+
+
+def parquet_parts(directory: str) -> list[str]:
+    """Sorted paths of the Parquet data files a Spark write left in
+    ``directory``, without its ``_SUCCESS`` marker and ``.crc`` files."""
+    return [
+        os.path.join(directory, name)
+        for name in sorted(os.listdir(directory))
+        if name.endswith(".parquet") and name[0] not in "._"
+    ]
+
+
+def staged_seq_ranges(
+    staging: str, start: int
+) -> tuple[list[tuple[str, int, int]], int]:
+    """The non-empty Parquet parts of a bulk append's staging
+    directory as ``[(path, first_seq, last_seq), ...]`` in seq order,
+    and their total row count, all from the footers (``footer_counts``).
+
+    The parts must tile ``[start, start + total - 1]`` exactly: each
+    part holds ``last - first + 1`` rows, the first part starts at
+    ``start`` and each next one right after the previous. Anything
+    else (a gap, an overlap, a duplicated seq) would publish a log
+    whose file names disagree with its rows, so it raises
+    ``RuntimeError`` instead; the caller removes the staging
+    directory."""
+    parts = []
+    for part in parquet_parts(staging):
+        n, lo, hi = footer_counts(part)
+        if n:
+            parts.append((lo, hi, n, part))
+    parts.sort()
+    ranges: list[tuple[str, int, int]] = []
+    expect = start
+    for lo, hi, n, part in parts:
+        if lo != expect or hi - lo + 1 != n:
+            raise RuntimeError(
+                f"staged part {part} holds {n} rows with seq {lo}..{hi}, "
+                f"but the parts must tile from seq {start} and this one "
+                f"must start at {expect} with one row per seq"
+            )
+        ranges.append((part, lo, hi))
+        expect = hi + 1
+    return ranges, expect - start
+
+
 def spark_ddl(schema: Schema) -> str:
     """Spark DDL string for the full log schema (system + payload)."""
     ddl = ["seq BIGINT", "created_at BIGINT", "expires_at BIGINT",
@@ -612,7 +704,8 @@ class QueueStorage:
         silent permanent loss, at-least-once violated. Replaying here
         makes every flock-holding read path see the finished commit
         instead of the torn middle. Costs one stat() when no manifest
-        exists.
+        exists. A replay that removed or renamed anything logs one
+        warning with both counts.
 
         Olds out BEFORE staged files appear under their final names —
         the same order as the live merge path, for the lock-free
@@ -632,10 +725,18 @@ class QueueStorage:
                 if os.path.exists(old):
                     os.remove(old)
                     touched.append(old)
+            removed = len(touched)
             for spath in manifest.get("staged", []):
                 if os.path.exists(spath):
                     os.replace(spath, spath[: -len(".compact")])
                     touched.append(spath)
+            if touched:
+                log.warning(
+                    "queue %s: finished a dead compactor's commit: "
+                    "removed %d superseded file(s), renamed %d staged "
+                    "file(s) into place", self.path, removed,
+                    len(touched) - removed,
+                )
             if self.control_sync and touched:
                 # power-loss ordering (r19): the manifest unlink lives
                 # in the queue ROOT while the replayed renames/removals
@@ -1347,12 +1448,7 @@ class QueueStorage:
         fully-consumed groups without re-walking the footer."""
         if meta.num_row_groups <= 1:
             return None
-        seq_leaf = None
-        rg0 = meta.row_group(0)
-        for j in range(rg0.num_columns):
-            if rg0.column(j).path_in_schema == "seq":
-                seq_leaf = j
-                break
+        seq_leaf = _leaf_index(meta, "seq")
         if seq_leaf is None:
             return None
         prev_max = None

@@ -138,24 +138,48 @@ def restore_session_tuning(spark: SparkSession) -> SparkSession:
 # the schema by reading parquet footers on EVERY call (~110 ms/table
 # locally), and operator construction re-reads the same handful of
 # corpus tables two or three times per query. The memo keys on
-# (applicationId, path) and stores only the SCHEMA — a plan-construction
-# metadata fact, never data or results; every action still scans the
-# parquet files. Contract: the path's schema is immutable for the life
-# of the application (the repo's corpus tables are read-only inputs and
-# releases are generational — a new version is a new path). Callers
-# that rewrite a path in place must use spark.read directly.
+# (applicationId, path, stat fingerprint of the path) and stores only
+# the SCHEMA — a plan-construction metadata fact, never data or
+# results; every action still scans the parquet files. The fingerprint
+# (``_path_stamp``) makes a path rewritten in place within one
+# application miss the memo instead of being served its old schema.
 # ---------------------------------------------------------------------------
 
 _SCHEMA_MEMO: dict = {}
 
 
+def _path_stamp(path: str) -> tuple | None:
+    """Stat fingerprint of a local parquet path: ``(mtime_ns, size)``
+    of a file, or of a directory plus ``(name, mtime_ns, size)`` of
+    each file in it. Rewriting the path changes it, so a memo keyed on
+    it misses instead of serving the old contents. ``None`` for a path
+    the driver cannot stat (a remote URI): such entries rely on the
+    path not being rewritten within one application."""
+    try:
+        st = os.stat(path)
+        if not os.path.isdir(path):
+            return (st.st_mtime_ns, st.st_size)
+        files = []
+        with os.scandir(path) as it:
+            for e in it:
+                if e.is_file():
+                    est = e.stat()
+                    files.append((e.name, est.st_mtime_ns, est.st_size))
+        return (st.st_mtime_ns, st.st_size, tuple(sorted(files)))
+    except OSError:
+        return None
+
+
 def _memo_put(memo: dict, key: tuple, value) -> None:
-    """Insert into an (applicationId, ...)-keyed memo, first evicting
-    every entry of an EARLIER application: a finished application's
-    keys can never hit again, and without eviction they accumulated
-    for the life of the driver process."""
-    app = key[0]
-    for k in [k for k in memo if k[0] != app]:
+    """Insert into an (applicationId, path, stamp, ...)-keyed memo,
+    first evicting every entry of an EARLIER application (a finished
+    application's keys can never hit again, and without eviction they
+    accumulated for the life of the driver process) and every entry
+    of the same path under another stamp (an older fingerprint of a
+    rewritten path never hits again either)."""
+    app, path, stamp = key[:3]
+    for k in [k for k in memo
+              if k[0] != app or (k[1] == path and k[2] != stamp)]:
         del memo[k]
     memo[key] = value
 
@@ -186,17 +210,18 @@ def _schema_conf_sig(spark: SparkSession) -> tuple:
 
 def read_immutable_parquet(spark: SparkSession, path: str):
     """``spark.read.parquet(path)`` with per-(application, path,
-    inference-confs) schema reuse — skips repeated footer-based schema
-    inference for the immutable input tables operators read during
-    query construction.
+    stat fingerprint, inference-confs) schema reuse — skips repeated
+    footer-based schema inference for the input tables operators read
+    during query construction.
 
-    Immutability of ``path`` is load-bearing for correctness: nothing
-    checks the files, so a path rewritten with a different schema
-    within one application is read under the memoized (stale) schema.
-    Rewrite in place only through ``spark.read`` directly. Entries of
-    earlier applications are evicted on insert."""
+    A local path rewritten within one application changes its stat
+    fingerprint (``_path_stamp``) and misses the memo, so its new
+    schema is inferred; a path the driver cannot stat is keyed
+    without one and must not be rewritten in place. Entries of
+    earlier applications, and older fingerprints of the same path,
+    are evicted on insert."""
     try:
-        key = (spark.sparkContext.applicationId, path,
+        key = (spark.sparkContext.applicationId, path, _path_stamp(path),
                _schema_conf_sig(spark))
     except Exception:
         return spark.read.parquet(path)
@@ -209,13 +234,13 @@ def read_immutable_parquet(spark: SparkSession, path: str):
 
 
 # ---------------------------------------------------------------------------
-# Row-count memo for the same immutable tables (r21, VERDICT r20 next
+# Row-count memo for the same input tables (r21, VERDICT r20 next
 # #7): ``_sem_k_cells`` sized semantic_dedup's blocking cells with a
 # fresh parquet-footer count() JOB on every construction, and
 # q_semantic_dedup constructs twice — two Spark jobs per gate for a
-# number that cannot change within an application. Counts are data
-# facts independent of schema-inference confs, so the key is just
-# (applicationId, path).
+# number that does not change while the files do not. Counts are data
+# facts independent of schema-inference confs, so the key is
+# (applicationId, path, stat fingerprint of the path).
 # ---------------------------------------------------------------------------
 
 _COUNT_MEMO: dict = {}
@@ -255,16 +280,18 @@ def local_rows_frame(spark: SparkSession, rows, schema):
 
 
 def immutable_parquet_count(spark: SparkSession, path: str) -> int:
-    """Row count of an immutable parquet path, memoized per
-    (applicationId, path). The first call runs the parquet-footer
-    count job; later calls in the same application are a dict hit.
+    """Row count of a parquet path, memoized per (applicationId,
+    path, stat fingerprint). The first call runs the parquet-footer
+    count job; later calls in the same application are a dict hit
+    while the files are unchanged.
 
-    Immutability of ``path`` is load-bearing for correctness: nothing
-    checks the files, so a path rewritten within one application
-    returns the count of its FIRST contents. Entries of earlier
-    applications are evicted on insert."""
+    A local path rewritten within one application changes its stat
+    fingerprint (``_path_stamp``) and is counted again; a path the
+    driver cannot stat is keyed without one and must not be rewritten
+    in place. Entries of earlier applications, and older fingerprints
+    of the same path, are evicted on insert."""
     try:
-        key = (spark.sparkContext.applicationId, path)
+        key = (spark.sparkContext.applicationId, path, _path_stamp(path))
     except Exception:
         return read_immutable_parquet(spark, path).count()
     n = _COUNT_MEMO.get(key)

@@ -14,6 +14,7 @@ in CSV — exporting them there raises rather than silently corrupting.
 
 from __future__ import annotations
 
+import os
 import weakref
 from typing import Sequence
 
@@ -21,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from quebic_spark.errors import IncompatibleSchemaException
 from quebic_spark.queue.queue import Queue
+from quebic_spark.queue.storage import footer_counts, parquet_parts
 from quebic_spark.schema import BINARY, TENSOR
 
 _FORMATS = ("parquet", "csv", "json", "orc")
@@ -99,10 +101,13 @@ def export_queue(spark: SparkSession, queue: Queue, path: str,
     if fmt == "csv":
         writer = writer.option("header", "true")
     writer.format(fmt).save(path)
-    # count the WRITTEN output (parquet/orc answer from footers), not
-    # the source: a pre-write count() re-read every batch file and
-    # re-ran the TTL filter — double I/O over the whole pending set
-    # for a return value (r13 review)
+    # count the WRITTEN output, not the source: a pre-write count()
+    # re-read every batch file and re-ran the TTL filter — double I/O
+    # over the whole pending set for a return value (r13 review).
+    # Local parquet output is counted from its footers with no Spark
+    # job; other formats and remote paths are read back by Spark.
+    if fmt == "parquet" and os.path.isdir(path):
+        return sum(footer_counts(p, None)[0] for p in parquet_parts(path))
     reader = spark.read
     if fmt in ("csv", "json"):
         from pyspark.sql.types import StringType, StructField, StructType

@@ -1341,10 +1341,12 @@ def migrate_quebic_queue(
         payload = df.where(F.col("queue") == base).select(
             *schema.column_names, "pos"
         )
-        # persist before the counts (r15 review): without it the
-        # binaryFile chain parse ran THREE times — this count,
-        # append_dataframe's internal count, and the staged write —
-        # each re-shipping the whole multi-GB file to an executor.
+        # persist before the count (r15 review): without it the
+        # binaryFile chain parse ran once for this count and again for
+        # the staged write, each re-shipping the whole multi-GB file
+        # to an executor. The materialised cache also hands
+        # append_dataframe an exact row count in its plan statistics,
+        # which picks its seq path without another job.
         # DISK_ONLY, not the MEMORY_AND_DISK default: a queue file is
         # one partition, and the MemoryStore must UNROLL a block in
         # heap before it can decide to spill — a multi-GiB partition

@@ -428,7 +428,8 @@ def test_sem_k_cells_pinned_and_memoized(spark):
         if not os.path.isdir(sf):
             continue
         assert _sem_k_cells(spark, sf) == S.N_CENTROIDS == 8
-        key = (app, f"{sf}/embeddings.parquet")
+        path = f"{sf}/embeddings.parquet"
+        key = (app, path, sess._path_stamp(path))
         assert key in sess._COUNT_MEMO
         # memo hit, not a re-count: a poisoned memo value must be
         # returned verbatim (restored after)

@@ -606,6 +606,7 @@ def test_read_immutable_parquet_memoizes_schema_only(spark, sf_dir):
     never data: every action still scans the parquet files."""
     from quebic_spark.session import (
         _SCHEMA_MEMO,
+        _path_stamp,
         _schema_conf_sig,
         read_immutable_parquet,
     )
@@ -616,7 +617,8 @@ def test_read_immutable_parquet_memoizes_schema_only(spark, sf_dir):
     # r21: the key carries the schema-inference conf signature so a
     # read under one conf never hands its schema to a read under
     # another (ADVICE r20 — e.g. nanosAsLong changes events.ts type)
-    key = (spark.sparkContext.applicationId, p, _schema_conf_sig(spark))
+    key = (spark.sparkContext.applicationId, p, _path_stamp(p),
+           _schema_conf_sig(spark))
     assert key in _SCHEMA_MEMO
     memoized = read_immutable_parquet(spark, p)
     assert first.schema == direct.schema == memoized.schema
@@ -636,7 +638,8 @@ def test_read_immutable_parquet_memoizes_schema_only(spark, sf_dir):
         flipped = "false" if str(prev).lower() == "true" else "true"
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", flipped)
         key2 = (
-            spark.sparkContext.applicationId, p, _schema_conf_sig(spark)
+            spark.sparkContext.applicationId, p, _path_stamp(p),
+            _schema_conf_sig(spark),
         )
         assert key2 != key
     finally:
@@ -644,6 +647,35 @@ def test_read_immutable_parquet_memoizes_schema_only(spark, sf_dir):
             spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
         else:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
+
+
+def test_rewritten_path_misses_both_memos(spark, tmp_path):
+    """A parquet path rewritten in place within one application changes
+    its stat fingerprint, so the schema and count memos infer and count
+    the new contents instead of serving the old ones; only the newest
+    fingerprint of the path stays memoized."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from quebic_spark import session as sess
+
+    f = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3]}), f)
+    assert sess.read_immutable_parquet(spark, f).columns == ["a"]
+    assert sess.immutable_parquet_count(spark, f) == 3
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), f)
+    assert sess.read_immutable_parquet(spark, f).columns == ["a", "b"]
+    assert sess.immutable_parquet_count(spark, f) == 2
+    d = str(tmp_path / "d")
+    spark.range(5).write.parquet(d)
+    assert sess.immutable_parquet_count(spark, d) == 5
+    spark.range(7).selectExpr("id", "id AS j").write.mode(
+        "overwrite").parquet(d)
+    assert sess.read_immutable_parquet(spark, d).columns == ["id", "j"]
+    assert sess.immutable_parquet_count(spark, d) == 7
+    for memo in (sess._SCHEMA_MEMO, sess._COUNT_MEMO):
+        assert [k[2] for k in memo if k[1] == f] == [sess._path_stamp(f)]
+        assert [k[2] for k in memo if k[1] == d] == [sess._path_stamp(d)]
 
 
 def test_immutable_memos_evict_earlier_applications(monkeypatch):
@@ -675,4 +707,4 @@ def test_immutable_memos_evict_earlier_applications(monkeypatch):
     sess.read_immutable_parquet(new, "/t/b")
     assert sess.immutable_parquet_count(new, "/t/b") == 42
     assert [k[:2] for k in sess._SCHEMA_MEMO] == [("app-new", "/t/b")]
-    assert list(sess._COUNT_MEMO) == [("app-new", "/t/b")]
+    assert [k[:2] for k in sess._COUNT_MEMO] == [("app-new", "/t/b")]

@@ -2,6 +2,7 @@
 (SURVEY §5) plus the Spark bulk paths.
 """
 
+import os
 import random
 import string
 import threading
@@ -574,6 +575,42 @@ def test_live_consumer_survives_torn_recovery_replay(qpath):
     q.close()
 
 
+def test_read_path_logs_compaction_replay(qpath, caplog):
+    """A read path that finishes a dead compactor's commit logs one
+    warning with the number of files removed and renamed; a read with
+    no manifest to replay logs nothing."""
+    import json as _json
+    import logging
+
+    import pyarrow as pa_mod
+    import pyarrow.parquet as pq
+
+    q = Queue(qpath, SCHEMA, capacity=100, auto_compact_files=None)
+    for i in range(4):
+        q.publisher().push([i, f"v{i}"])
+    st = q._storage
+    olds = st.list_batches()
+    merged = pa_mod.concat_tables(
+        [pq.read_table(p) for _, _, p in olds]
+    ).sort_by("seq")
+    staged = st.batch_path(1, 4) + ".compact"
+    pq.write_table(merged, staged)
+    # torn before the removals: manifest written, olds still present
+    with open(st.compact_manifest_path, "w") as f:
+        _json.dump(
+            {"staged": [staged], "remove": [p for _, _, p in olds]}, f
+        )
+    with caplog.at_level(logging.WARNING, "quebic_spark.queue.storage"):
+        assert q.subscriber().peek_head() == (0, "v0")
+        assert q.subscriber().pop_n(4) == [(i, f"v{i}") for i in range(4)]
+    replays = [r.getMessage() for r in caplog.records
+               if "dead compactor" in r.getMessage()]
+    assert len(replays) == 1
+    assert "removed 4 superseded file(s)" in replays[0]
+    assert "renamed 1 staged file(s)" in replays[0]
+    q.close()
+
+
 def test_live_consumer_survives_real_sigkilled_compactor_process(qpath):
     """The judge's r16 repro shape, fully cross-process and fully
     real: a SEPARATE compactor process SIGKILLs ITSELF between the
@@ -855,6 +892,212 @@ def test_append_dataframe_fifo_interleaves_with_push(qpath, spark):
         (2, "bulk2"),
         (-2, "after"),
     ]
+    q.dispose()
+
+
+def _staging_dirs(q):
+    return [n for n in os.listdir(q._storage.path)
+            if n.startswith("_staging-")]
+
+
+def _jobs_in_group(spark, group):
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_append_dataframe_empty_frame_publishes_nothing(
+    qpath, spark, monkeypatch
+):
+    """Zero staged rows: 0 returned, no pointer flip, no batch file,
+    no leftover staging directory and no staged_hook call."""
+    q = Queue(qpath, SCHEMA, capacity=100)
+    flips, hooked = [], []
+    real_flip = q._storage.set_next_seq
+    monkeypatch.setattr(q._storage, "set_next_seq",
+                        lambda n: flips.append(n) or real_flip(n))
+    for df in (
+        spark.range(0).selectExpr("id", "concat('x', id) AS text"),
+        spark.createDataFrame([], "c0 long, c1 string"),
+    ):
+        assert q.append_dataframe(df, order_by=[df.columns[0]],
+                                  staged_hook=hooked.append) == 0
+    assert flips == [] and hooked == []
+    assert _staging_dirs(q) == []
+    assert q._storage.list_batches() == []
+    assert q._storage.next_seq() == 1
+    q.dispose()
+
+
+def test_append_dataframe_over_capacity_publishes_nothing(qpath, spark):
+    """Capacity is enforced on the staged rows: an over-capacity
+    append raises ValueError with nothing published, the pointer
+    unmoved, the staging directory removed and no staged_hook call."""
+    q = Queue(qpath, SCHEMA, capacity=10)
+    q.publisher().push([-1, "kept"])
+    hooked = []
+    df = spark.range(50).selectExpr("id", "concat('x', id) AS text")
+    with pytest.raises(ValueError, match="capacity exceeded"):
+        q.append_dataframe(df, order_by=["id"], staged_hook=hooked.append)
+    assert hooked == []
+    assert _staging_dirs(q) == []
+    assert q._storage.next_seq() == 2
+    assert q.size() == 1
+    assert q.subscriber().pop_n(5) == [(-1, "kept")]
+    q.dispose()
+
+
+def test_append_dataframe_picks_path_from_statistics(
+    qpath, spark, monkeypatch
+):
+    """The window/range choice comes from Catalyst's statistics, never
+    from a count job: a frame whose exact rowCount exceeds the cutoff
+    takes the range path (mapInPandas), one under it the window path."""
+    from quebic_spark.queue.queue import estimated_rows
+
+    DataFrame = type(spark.range(1))  # the concrete (classic) class
+    ranged = []
+    real_map = DataFrame.mapInPandas
+
+    def spy_map(self, *a, **k):
+        ranged.append(True)
+        return real_map(self, *a, **k)
+
+    def no_count(self):
+        raise AssertionError("append_dataframe ran a count job")
+
+    monkeypatch.setattr(DataFrame, "mapInPandas", spy_map)
+    monkeypatch.setattr(DataFrame, "count", no_count)
+    q = Queue(qpath, SCHEMA, capacity=100000)
+    big = spark.range(200).selectExpr(
+        "id", "concat('x', id) AS text").persist()
+    big.collect()  # a materialised cache knows its exact row count
+    assert estimated_rows(big) == 200
+    assert q.append_dataframe(big, order_by=["id"],
+                              small_batch_rows=100) == 200
+    assert ranged == [True]
+    small = spark.range(200, 250).selectExpr("id", "concat('x', id) AS text")
+    assert q.append_dataframe(small, order_by=["id"],
+                              small_batch_rows=100) == 50
+    assert ranged == [True]
+    monkeypatch.undo()
+    q.verify()
+    assert q.subscriber().pop_n(250) == [(i, f"x{i}") for i in range(250)]
+    big.unpersist()
+    q.dispose()
+
+
+def test_append_dataframe_small_frame_runs_at_most_two_jobs(qpath, spark):
+    """A small bulk append runs the staged write and nothing else: one
+    job for the window's shuffle and one for the write."""
+    q = Queue(qpath, SCHEMA, capacity=100000)
+    df = spark.range(1000).selectExpr("id", "concat('x', id) AS text")
+    sc = spark.sparkContext
+    group = f"append-jobs-{os.getpid()}-{id(q)}"
+    sc.setJobGroup(group, group)
+    try:
+        assert q.append_dataframe(df, order_by=["id"]) == 1000
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 1 <= _jobs_in_group(spark, group) <= 2
+    q.verify()
+    q.dispose()
+
+
+def _write_seq_part(path, seqs):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"seq": pa.array(seqs, pa.int64())}), path)
+
+
+def test_staged_parts_must_tile_the_seq_range(tmp_path):
+    """The staged footer ranges must tile [start, start + n - 1]: a gap,
+    an overlap or a part holding a duplicated seq fails loudly; empty
+    parts and non-part files are ignored."""
+    from quebic_spark.queue.storage import staged_seq_ranges
+
+    def staged(name, parts):
+        d = tmp_path / name
+        d.mkdir()
+        (d / "_SUCCESS").write_text("")
+        for i, seqs in enumerate(parts):
+            _write_seq_part(str(d / f"part-{i:05d}.parquet"), seqs)
+        return str(d)
+
+    ok = staged("ok", [[6, 7, 8], [], [4, 5]])
+    ranges, n = staged_seq_ranges(ok, 4)
+    assert n == 5
+    assert [(s, e) for _, s, e in ranges] == [(4, 5), (6, 8)]
+    assert staged_seq_ranges(staged("empty", [[]]), 4) == ([], 0)
+    for name, parts in [
+        ("gap", [[4, 5], [7, 8]]),
+        ("overlap", [[4, 5, 6], [6, 7]]),
+        ("dup", [[4, 4, 5]]),
+        ("late_start", [[5, 6]]),
+    ]:
+        with pytest.raises(RuntimeError, match="tile"):
+            staged_seq_ranges(staged(name, parts), 4)
+
+
+def test_footer_counts_falls_back_without_statistics(tmp_path, monkeypatch):
+    """footer_counts answers from row-group statistics when every group
+    has them (no column read) and reads the column when they are
+    missing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from quebic_spark.queue.storage import footer_counts
+
+    t = pa.table({"seq": pa.array([9, 3, 7, 5], pa.int64()),
+                  "v": ["a", "b", "c", "d"]})
+    with_stats = str(tmp_path / "stats.parquet")
+    no_stats = str(tmp_path / "nostats.parquet")
+    pq.write_table(t, with_stats, row_group_size=2)
+    pq.write_table(t, no_stats, write_statistics=False)
+    meta = pq.ParquetFile(no_stats).metadata
+    st = meta.row_group(0).column(0).statistics
+    assert st is None or not st.has_min_max
+    assert footer_counts(no_stats) == (4, 3, 9)
+    assert footer_counts(no_stats, None) == (4, None, None)
+    real_read = pq.ParquetFile.read
+
+    def no_read(self, *a, **k):
+        raise AssertionError("column read despite footer statistics")
+
+    monkeypatch.setattr(pq.ParquetFile, "read", no_read)
+    assert footer_counts(with_stats) == (4, 3, 9)
+    monkeypatch.setattr(pq.ParquetFile, "read", real_read)
+    empty = str(tmp_path / "empty.parquet")
+    pq.write_table(t.slice(0, 0), empty)
+    assert footer_counts(empty) == (0, None, None)
+
+
+def test_append_dataframe_forged_part_range_fails_loudly(
+    qpath, spark, monkeypatch
+):
+    """A staged part whose footer range breaks the tiling aborts the
+    append before staged_hook runs: nothing published, the pointer
+    unmoved and the staging directory removed."""
+    from quebic_spark.queue import storage as storage_mod
+
+    real = storage_mod.footer_counts
+
+    def shifted(path, column="seq"):
+        n, lo, hi = real(path, column)
+        return (n, lo + 1, hi + 1) if n else (n, lo, hi)
+
+    monkeypatch.setattr(storage_mod, "footer_counts", shifted)
+    q = Queue(qpath, SCHEMA, capacity=1000)
+    hooked = []
+    df = spark.range(20).selectExpr("id", "concat('x', id) AS text")
+    with pytest.raises(RuntimeError, match="tile"):
+        q.append_dataframe(df, order_by=["id"], staged_hook=hooked.append)
+    assert hooked == []
+    assert _staging_dirs(q) == []
+    assert q._storage.list_batches() == []
+    assert q._storage.next_seq() == 1
     q.dispose()
 
 

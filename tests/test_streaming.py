@@ -1004,6 +1004,73 @@ def test_queue_sink_noops_replayed_batch(qpath, spark):
     dst.dispose()
 
 
+def test_queue_sink_empty_batch_writes_only_committed_marker(
+    qpath, spark, monkeypatch
+):
+    """An empty micro-batch stages zero rows: the sink writes one
+    committed marker (no intent marker), and the queue's pointer and
+    batch files are untouched."""
+    from quebic_spark.queue import storage as storage_mod
+    from quebic_spark.streaming import queue_sink
+
+    dst = Queue(qpath, SCHEMA, capacity=100)
+    marks_path = os.path.join(dst._storage.path, "sink-commits.json")
+    writes = []
+    real_write = storage_mod.write_json_atomic
+
+    def spy(path, obj, *args, **kwargs):
+        if path == marks_path:
+            writes.append({sid: dict(m) for sid, m in obj.items()})
+        return real_write(path, obj, *args, **kwargs)
+
+    monkeypatch.setattr(storage_mod, "write_json_atomic", spy)
+    sink = queue_sink(dst, order_by=["c0"])
+    sink(spark.createDataFrame([], "c0 long, c1 string"), 0)
+    assert writes == [{"default": {"batch_id": 0, "start_seq": 1,
+                                   "rows": 0, "committed": True}}]
+    assert dst._storage.next_seq() == 1
+    assert dst._storage.list_batches() == []
+    assert not [n for n in os.listdir(dst._storage.path)
+                if n.startswith("_staging-")]
+    dst.dispose()
+
+
+def test_queue_sink_micro_batch_runs_one_job(qpath, spark):
+    """One queue_sink micro-batch under run_available is one Spark job,
+    the staged write: the consumer sorts a small batch inside one
+    coalesced partition, so the sink's seq window needs no exchange,
+    and append_dataframe runs no count."""
+    from quebic_spark.streaming import queue_sink
+
+    src = Queue(qpath + "_src", SCHEMA, capacity=10000)
+    dst = Queue(qpath + "_dst", SCHEMA, capacity=10000)
+    for lo in (0, 40):
+        src.append_dataframe(
+            spark.range(lo, lo + 40).selectExpr("id", "concat('v', id)"),
+            order_by=["id"],
+        )
+    sc = spark.sparkContext
+    sink = queue_sink(dst, order_by=["a_seq"])
+    groups, batches = set(), []
+
+    def body(df, batch_id):
+        groups.add(sc.getLocalProperty("spark.jobGroup.id"))
+        batches.append(batch_id)
+        sink(df.select("c0", "c1", F.col("seq").alias("a_seq")), batch_id)
+
+    StreamingConsumer(spark, src).run_available(body,
+                                                max_files_per_trigger=1)
+    assert len(batches) == 2 and None not in groups
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sum(len(sc.statusTracker().getJobIdsForGroup(g))
+               for g in groups)
+    assert jobs <= len(batches), jobs
+    assert _drain_ids(dst) == list(range(80))
+    dst.verify()
+    src.dispose()
+    dst.dispose()
+
+
 def test_queue_sink_intent_with_moved_pointer_skips(qpath, spark):
     """Crash window: append committed (pointer flipped) but the
     committed-marker write never ran. The replay must attribute the

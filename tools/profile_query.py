@@ -25,6 +25,11 @@ sys.path.insert(
 )
 
 
+# the SQL metric Spark's Python runners (pandas/Arrow UDFs, mapInPandas)
+# update per task with the time spent running Python workers, in ms
+_PY_RUN_METRIC = "time to run Python workers"
+
+
 def _parse_event_log(log_dir: str) -> list[dict]:
     """Job records (id, submit/complete ms, stage metrics) from every
     event-log file under ``log_dir``."""
@@ -93,9 +98,13 @@ def _parse_event_log(log_dir: str) -> list[dict]:
             st["sh_write"] = st.get("sh_write", 0) + swm.get(
                 "Shuffle Bytes Written", 0
             )
-            pym = tm.get("Python Eval Metrics") or {}
-            if pym:
-                st["py_ms"] = st.get("py_ms", 0)
+            # Python UDF time is no task metric: it is the per-task
+            # update of the "time to run Python workers" SQL metric (ms)
+            st["py_ms"] = st.get("py_ms", 0) + sum(
+                int(a.get("Update", 0))
+                for a in (ev.get("Task Info") or {}).get("Accumulables", [])
+                if a.get("Name") == _PY_RUN_METRIC
+            )
     out = []
     for jid, j in sorted(jobs.items()):
         dur = (j.get("t1", j["t0"]) - j["t0"]) / 1000.0
@@ -170,7 +179,8 @@ def main() -> None:
                 f"run={s.get('run_ms', 0) / 1000:6.2f}s "
                 f"cpu={s.get('cpu_ms', 0) / 1000:6.2f}s "
                 f"shR={s.get('sh_read', 0) >> 10}K "
-                f"shW={s.get('sh_write', 0) >> 10}K  "
+                f"shW={s.get('sh_write', 0) >> 10}K "
+                f"py={s.get('py_ms', 0) / 1000:6.2f}s  "
                 f"{s.get('name', '')[:90]}"
             )
     sample1 = [j for j in jobs if j.get("sample") == 1]
