@@ -10,17 +10,16 @@ surface is curated explicitly:
 * ``GATE_ORDER`` — exactly the queries the driver checks, newest /
   most-recently-changed first so a future overflow drops the oldest,
   most-stable gates instead of the newest code.
-* ``RETIRED_GATES`` — queries whose gate is redundant with another
-  entry's operator coverage (e.g. ``dedup_exact_rows`` gates the same
-  md5-groupBy operator as ``dedup_exact``). They remain fully
-  implemented and oracle-paired; ``tests/test_registry.py`` runs each
-  against its DuckDB oracle at sf0.001 so they keep hash-level
-  evidence — they just don't spend one of the 50 driver slots.
+* ``RETIRED_GATES`` — queries that hold no driver slot, each mapped to
+  the live gates that run the same helper or expression (``()`` when
+  none does). They stay oracle-paired; ``tests/test_registry.py`` runs
+  each against its DuckDB oracle at sf0.001, so they keep hash-level
+  evidence without spending one of the 50 driver slots.
 
 Every query defined by an operator module must appear in exactly one of
-the two lists; the import-time assertion below fails the build
-otherwise (so adding a query without curating the gate is a hard error,
-not a silent evidence gap).
+the two; the import-time checks below raise otherwise (so adding a
+query without curating the gate is a hard error, not a silent evidence
+gap).
 """
 
 from __future__ import annotations
@@ -126,438 +125,96 @@ GATE_ORDER: tuple[str, ...] = (
     "event_watermark_windows",
     "queue_fifo_roundtrip",
     "asof_click_to_purchase",
-)  # ann_bruteforce_topk rotated out in r12 (see RETIRED_GATES)
+)
 
-# Gates whose operator coverage is subsumed by a GATE_ORDER entry.
-# Each stays oracle-checked in tests/test_registry.py.
-RETIRED_GATES: dict[str, str] = {
-    "quality_filter_stats": "retired in r9 (driver-green r2-r8) to "
-                            "free a slot for footer_stats_audit: "
-                            "every expression it thresholds is "
-                            "hash-gated elsewhere — token sizing via "
-                            "the same tokens() helper inside live "
-                            "source_scorecard (total_tokens / "
-                            "avg_doc_tokens), the distinct-token "
-                            "diversity ratio in the text_stats / "
-                            "doc_quality oracle lane, and the "
-                            "boolean-rule count arithmetic class via "
-                            "live train_split_counts; full per-source "
-                            "rule oracle keeps running in "
-                            "tests/test_registry.py",
-    "ann_bruteforce_topk": "retired in r12 (driver-green r2-r11, code "
-                           "unchanged since the r7 memoization) to "
-                           "free a slot for unicode_normalize_stats "
-                           "(VERDICT r11 #3): q_ann_bruteforce_topk "
-                           "RETURNS the memoized _exact_topk frame "
-                           "that both live recall gates join against "
-                           "as ground truth (the `_exact_topk(spark, "
-                           "sf_dir)` joins inside q_ann_ivf_learned_"
-                           "recall and q_ann_ivf_pq_recall in "
-                           "similarity.py) — their hash-checked recall "
-                           "values are functions of these exact pairs, so a "
-                           "brute-force regression breaks two live "
-                           "gates (the same truth-side subsumption as "
-                           "heavy_hitter_keys/cms_heavy_hitters); the "
-                           "cosine top-k window also runs live in "
-                           "ann_ivf_nprobe2's rerank. Full pair-level "
-                           "oracle keeps running in "
-                           "tests/test_registry.py",
-    "top_orders_per_segment": "retired in r10 (driver-green r2-r9, "
-                              "code unchanged since r2) to free a "
-                              "slot for diversity_sample: its "
-                              "per-group rank-window top-k mechanism "
-                              "runs VERBATIM inside live "
-                              "dedup_keep_best (rank + count windows "
-                              "sharing one group-key exchange) and "
-                              "inside diversity_sample itself "
-                              "(per-cell rank/count windows), and "
-                              "the broadcast dim join is pinned by "
-                              "test_plans.py::test_star_join_"
-                              "broadcasts + live pricing_summary; "
-                              "full oracle keeps running in "
-                              "tests/test_registry.py",
-    "event_json_props": "retired in r10 (driver-green r2-r9, code "
-                        "unchanged since r2) to free a slot for "
-                        "quebic_format_roundtrip: a single "
-                        "get_json_object extraction + sum/min/max agg "
-                        "— the scalar-function category it gated is "
-                        "exercised by a dozen live gates and the "
-                        "aggregation class by every event gate; full "
-                        "JSON-path oracle keeps running in "
-                        "tests/test_registry.py",
-    "mixture_sample": "retired in r9 (driver-green r4-r8) to free a "
-                      "slot for line_dedup: the md5-fraction "
-                      "admission test, fixed-point thr arithmetic, "
-                      "_mix_weight table, and broadcast-scalar rate "
-                      "join run VERBATIM inside the live "
-                      "token_budget_mixture gate (the token-weighted "
-                      "superset of the same mechanism); full oracle "
-                      "keeps running in tests/test_registry.py",
-    "lang_id": "the marker-hit + priority-chain argmax prediction is "
-               "literally the same code (_lang_pred_parts) running "
-               "inside the live source_scorecard gate, whose "
-               "n_lang_match column hash-checks prediction-vs-label "
-               "agreement per source; a prediction regression breaks "
-               "that gate's hash. Full per-doc oracle keeps running "
-               "in tests/test_registry.py. Slot given to "
-               "source_scorecard in r6",
-    "cardinality_sketch": "every mechanism it gates (md5-keyed exact "
-                          "distinct to keep text bodies out of the "
-                          "Expand shuffle, approx-vs-exact tolerance "
-                          "booleans) runs verbatim inside the live "
-                          "hll_merge_cardinality gate, which adds the "
-                          "sketch-column mergeability contract on "
-                          "top. Full oracle keeps running in "
-                          "tests/test_registry.py. Slot given to "
-                          "hll_merge_cardinality in r6",
-    "heavy_hitter_keys": "its exact mechanism (key groupBy count + "
-                         "row_number top-k + tie-break) runs VERBATIM "
-                         "inside the live cms_heavy_hitters gate as "
-                         "the truth side the sketch estimates are "
-                         "hash-compared against — a regression in the "
-                         "exact path breaks that gate's hash. Full "
-                         "oracle (incl. the broadcast total-share "
-                         "join) keeps running in "
-                         "tests/test_registry.py. Slot given to "
-                         "cms_heavy_hitters in r6",
-    "session_topk_events": "session-window derivation stays live via "
-                           "event_sessions (same gap-based session "
-                           "tagging), per-group top-k rank windows "
-                           "stay live via top_orders_per_segment and "
-                           "dedup_keep_best (identical partition+"
-                           "orderBy+row_number shape), and the per-"
-                           "user ordered-frame family is now gated by "
-                           "event_anomaly_scores (bounded trailing "
-                           "frame). Full oracle keeps running in "
-                           "tests/test_registry.py. Slot given to "
-                           "event_anomaly_scores in r6",
-    "dedup_minhash_lsh": "the exact minhash_lsh_pairs function is the "
-                         "INPUT of the live dedup_clusters gate (its "
-                         "edge list is derived from these pairs, so a "
-                         "pair regression breaks that gate's hash), "
-                         "the banded-signature bucket join also lives "
-                         "in dedup_ngram_jaccard's inverted-index "
-                         "family, and dedup_lsh_recall measures this "
-                         "operator's recall in the test_registry "
-                         "lane. Full pair oracle keeps running in "
-                         "tests/test_registry.py. Slot given to "
-                         "phrase_search in r6",
-    "doc_quality": "the per-doc quality_exprs scalar pipeline stays "
-                   "live: dedup_keep_best ranks dup groups by the "
-                   "same composite score, corpus_release_counts runs "
-                   "it as the release composite's first stage, and "
-                   "the classifier gate distills from it "
-                   "(quality_filter_stats, cited here originally, "
-                   "retired in r9 — claims rest on live gates). Full per-doc oracle keeps "
-                   "running in tests/test_registry.py. Slot given to "
-                   "cdc_chunks in r6",
-    "ann_ivf_topk": "the nprobe=1 special case of the live "
-                    "ann_ivf_nprobe2 gate (same cell assignment, same "
-                    "probe join, same rerank window — test_similarity_"
-                    "lib asserts nprobe=1 IS the gated plan), and the "
-                    "learned-quantizer variant is live via "
-                    "ann_ivf_learned_recall. Full oracle keeps "
-                    "running in tests/test_registry.py. Slot given "
-                    "to zorder_events_stats in r6",
-    "dedup_embedding_cosine": "threshold cosine pair detection stays "
-                              "live via semantic_dedup (cell-blocked "
-                              "cosine edges + kept-set contract) and "
-                              "embedding_decontaminate (broadcast "
-                              "max-cosine threshold vs a reference "
-                              "set); the exact fold/oracle pairing is "
-                              "identical (functions/vector.py "
-                              "dot_product). Full oracle keeps "
-                              "running in tests/test_registry.py. "
-                              "Slot given to embedding_decontaminate "
-                              "in r6",
-    "ann_lsh_topk": "bit-signature bucketing stays live via "
-                    "dedup_simhash (same hyperplane-sign signature "
-                    "family); bucket-then-exact-rerank top-k stays "
-                    "live via ann_ivf_nprobe2 (cell-blocked rerank, "
-                    "same Window top-k) and ann_ivf_learned_recall. "
-                    "(dedup_minhash_lsh and ann_ivf_topk, cited here "
-                    "originally, retired the same round — coverage "
-                    "claims rest only on gates still in GATE_ORDER.) "
-                    "Full oracle keeps running in "
-                    "tests/test_registry.py. Slot given to "
-                    "chunk_documents in r6",
-    "dedup_incremental": "retired in r7 (3 driver-green rounds) to "
-                         "free a slot for ann_ivf_pq_recall: "
-                         "dedup_incremental_bloom gates a strict "
-                         "superset of the mechanism — same snapshot "
-                         "content key, same anti-join semantics, and "
-                         "the bench/driver rows are HASH-IDENTICAL "
-                         "(3794a949a7 for both in CORRECTNESS_r06), "
-                         "so a regression in the exact path breaks "
-                         "the live bloom gate too; full oracle keeps "
-                         "running in tests/test_registry.py",
-    "weighted_sample": "retired in r7 (4 driver-green rounds) to free "
-                       "a slot for leakage_safe_split: md5-threshold "
-                       "arithmetic selection stays live via "
-                       "token_budget_mixture (same per-source "
-                       "rate threshold on the same hash; "
-                       "mixture_sample retired r9) and "
-                       "train_split_counts (same bucket arithmetic); "
-                       "full oracle keeps running in "
-                       "tests/test_registry.py",
-    "status_priority_cube": "CUBE grouping sets retired in r7 after 5 "
-                            "driver-green rounds (r2-r6) to free a slot "
-                            "for the driver-virgin "
-                            "event_rollup_hierarchy; grouping-analytics "
-                            "coverage stays via pricing_summary's "
-                            "multi-aggregate groupBy (live) and this "
-                            "query's full CUBE oracle in "
-                            "tests/test_registry.py",
-    "urgent_vs_finished_outer": "full-outer-join NULL-extension retired "
-                                "in r7 after 5 driver-green rounds; the "
-                                "full-outer mechanism is now driver-"
-                                "gated by crawl_snapshot_diff (key-only "
-                                "full outer + status classification), "
-                                "and this query's oracle keeps running "
-                                "in tests/test_registry.py",
-    "above_avg_customers": "scalar-subquery decorrelation retired in r7 "
-                           "after 5 driver-green rounds to free a slot "
-                           "for token_budget_mixture; the decorrelated "
-                           "subquery plan is pinned by tests/"
-                           "test_plans.py and the full oracle keeps "
-                           "running in tests/test_registry.py",
-    "event_sliding_windows": "overlapping time windows; the window-"
-                             "grid mechanism stays live via "
-                             "event_watermark_windows (same window() "
-                             "expr + late-data contract) and "
-                             "event_sessions (session windows), "
-                             "tumbling grids via event_counts_hourly. "
-                             "Full oracle keeps running in tests/"
-                             "test_registry.py. Slot given to "
-                             "bpe_tokenizer_eval in r6 (the learned-"
-                             "tokenizer round-trip contract is a "
-                             "mechanism no other gate touches)",
-    "brand_name_similarity": "scalar string functions (levenshtein/"
-                             "upper/startswith/length) inside a grouped "
-                             "agg; the scalar-function family stays "
-                             "live via pii_scrub_stats (regexp chain), "
-                             "lang_id (marker counts), doc_quality "
-                             "(string stats), and grouped multi-agg via "
-                             "pricing_summary. "
-                             "Full oracle keeps running in tests/"
-                             "test_registry.py. Slot given to "
-                             "quality_classifier_eval in r6",
-    "tfidf_top_terms": "explode -> token groupBy with the round-6-"
-                       "decimal ln() discipline; lm_perplexity gates a "
-                       "strict superset of the mechanism (same explode "
-                       "+ vocab groupBy + rounded-ln float contract, "
-                       "plus the count-table joins and the exact "
-                       "DECIMAL per-doc reduction tfidf lacks); "
-                       "corpus-frequency aggregation itself stays live "
-                       "via repetition_stats/decontaminate. Full oracle "
-                       "keeps running in tests/test_registry.py. Slot "
-                       "given to lm_perplexity in r6",
-    "dedup_lsh_recall": "pure set algebra over the OUTPUTS of two live "
-                        "gates (dedup_minhash_lsh intersect/count "
-                        "dedup_ngram_jaccard) — every mechanism it "
-                        "exercises is driver-gated; its own full-hash "
-                        "oracle (recall value included) runs in "
-                        "tests/test_registry.py",
-    "dedup_span_strip": "derived 1:1 from the live dedup_spans gate "
-                        "(same _merged_spans derivation; the strip is "
-                        "the interval-complement cut) — the full "
-                        "reconstructed-text md5 check runs against its "
-                        "DuckDB oracle in tests/test_registry.py; a "
-                        "driver slot would double-spend the heaviest "
-                        "scan in the suite on one mechanism",
-    "returnflag_pivot": "PIVOT lowers to groupBy + conditional "
-                        "aggregates — the grouping-analytics family "
-                        "stays live via pricing_summary's "
-                        "multi-aggregate groupBy (grouping sets are "
-                        "oracle-checked via status_priority_cube in "
-                        "tests/test_registry.py); remains "
-                        "oracle-checked in tests/test_registry.py. "
-                        "Slot given to semantic_dedup in r6",
-    "part_supplier_overlap": "INTERSECT/EXCEPT set ops; the mechanism "
-                             "stays live through the anti-/semi-join "
-                             "family the optimizer rewrites set ops "
-                             "into: decontaminate + the release "
-                             "composite's decontamination stage "
-                             "(corpus_release_counts) gate anti-joins, "
-                             "crawl_snapshot_diff gates the full-outer "
-                             "overlap-reconciliation shape. Slot given "
-                             "to corpus_release_counts in r6",
-    "stratified_sample": "deterministic k-per-group selection via "
-                         "md5-rank window; the per-group rank window "
-                         "stays live in top_orders_per_segment and "
-                         "dedup_keep_best (same partition+orderBy+"
-                         "row_number shape), md5-ordered selection in "
-                         "weighted_sample. Slot given to "
-                         "dedup_incremental_bloom in r5",
-    "shard_assignment": "md5 hash-mod bucket assignment is live twice "
-                        "over in corpus_shards_roundtrip: the same "
-                        "hash_bucket expression routes the physical "
-                        "write AND the DuckDB oracle replays it "
-                        "arithmetically over the pruned read-back; "
-                        "md5-threshold selection stays live via "
-                        "train_split_counts/token_budget_mixture. Slot given "
-                        "to dedup_keep_best in r5",
-    "dedup_exact": "identical md5-groupBy keep-first dedup stays live "
-                   "twice over: pipeline_doc_counts' dedup stage runs "
-                   "the same content-fingerprint groupBy inside the "
-                   "fused pipeline, and dedup_incremental's snapshot "
-                   "key is the same md5(text) expression (plus "
-                   "dedup_exact_rows was already retired on these "
-                   "grounds). Slot given to corpus_shards_roundtrip "
-                   "in r5",
-    "price_percentiles": "percentile_approx grouped agg; the quantile "
-                         "family is gated live by quantile_sketch (GK "
-                         "sketch vs exact DuckDB quantiles, tighter "
-                         "contract), grouped scalar aggs by "
-                         "pricing_summary. Slot given to "
-                         "profile_documents in r5",
-    "region_revenue": "multi-way broadcast dim join + grouped agg; "
-                      "broadcast-join mechanics stay live via "
-                      "decontaminate (broadcast gram join) and "
-                      "token_budget_mixture (broadcast rate join), multi-"
-                      "table join + agg via part_supplier_overlap and "
-                      "pricing_summary. Slot given to "
-                      "ann_ivf_learned_recall in r5",
-    "multimodal_manifest": "binary payload derivation + octet "
-                           "accounting stay live in multimodal_decode "
-                           "(same encode() payload, same byte counts "
-                           "through the Arrow decode stage); the "
-                           "docs-to-embeddings co-resident equijoin is "
-                           "the broadcast equijoin family live in "
-                           "region_revenue / dedup_embedding_cosine, "
-                           "and md5 fingerprinting is the dedup_exact "
-                           "grouping key. Slot given to "
-                           "dedup_incremental in r4",
-    "embedding_label_stats": "per-label min/max of vector norms; the "
-                             "norm/dot-product expression stays live in "
-                             "every ann_* gate and "
-                             "dedup_embedding_cosine, grouped scalar "
-                             "agg in pricing_summary/region_revenue. "
-                             "Slot given to pii_scrub_stats in r4",
-    "token_counts": "per-source token totals over both tokenizer bases; "
-                    "the identical tokens()/regexp_count expressions "
-                    "stay live inside doc_quality (per-doc token stats) "
-                    "and tfidf_top_terms (tokenize+explode+count agg). "
-                    "Slot given to dedup_spans in r4",
-    "doc_fingerprints": "per-doc md5(normalized_text) projection; the "
-                        "identical fingerprint expression is the live "
-                        "dedup_exact grouping key, and scan+project "
-                        "text derivation stays live via doc_quality/"
-                        "lang_id. Slot given to repetition_stats in r4",
-    "sentiment_scores": "literal-lexicon token scoring, the same "
-                        "marker-lookup mechanism the live lang_id gate "
-                        "exercises (lexicon hits over the same "
-                        "tokenizer, CASE/greatest tie-break). Slot "
-                        "given to mixture_sample in r4",
-    "high_value_semijoin": "left-semi join is the complement of the "
-                           "already-retired left-anti "
-                           "(customers_without_orders); set-op coverage "
-                           "stays live via part_supplier_overlap. Slot "
-                           "given to ann_ivf_nprobe2 in r4",
-    "customer_order_stats": "running-frame window cumsum gated by "
-                            "sequence_packing (same partitionBy+orderBy+"
-                            "rowsBetween shape); grouped ranking by "
-                            "top_orders_per_segment",
-    "customers_without_orders": "left-anti join is the complement of the "
-                                "left-semi gated by high_value_semijoin; "
-                                "outer NULL-extension gated by "
-                                "crawl_snapshot_diff (full outer)",
-    "dedup_exact_rows": "same md5-groupBy dedup operator as dedup_exact",
-    "order_date_parts": "date-part extraction; calendar bucketing "
-                        "family gated live by event_watermark_windows "
-                        "(event-time windows)",
-    "monthly_order_volume": "date_trunc bucket agg; time-bucketed "
-                            "aggregation gated live by "
-                            "event_watermark_windows",
-    "asof_next_purchase": "forward as-of; generic asof_join lib op also "
-                          "covered by tests/test_temporal_lib.py, backward "
-                          "mode gated by asof_click_to_purchase",
-    "top_revenue_orders": "global top-k (TakeOrderedAndProject) gated by "
-                          "heavy_hitter_keys; ranked per-group top-k by "
-                          "top_orders_per_segment",
-    "event_counts_hourly": "tumbling hourly window subsumed by "
-                           "event_watermark_windows; countDistinct gated "
-                           "by tfidf_top_terms",
-    "text_stats": "per-doc token/char stats subsumed by doc_quality "
-                  "(distinct_ratio + length scoring)",
-    "supplier_part_distinct": "multi-countDistinct agg; countDistinct "
-                              "gated by tfidf_top_terms, broadcast "
-                              "dim join by region_revenue",
-    "order_priority_rollup": "ROLLUP grouping sets subsumed by "
-                             "status_priority_cube (CUBE, itself "
-                             "oracle-checked in tests/test_registry.py "
-                             "since its r7 retirement)",
-}
-
-# Machine-checked live coverage for retired gates whose PROSE above
-# cites gates that have since retired themselves (r14 review: 17
-# rationales written in earlier rounds went stale as their citations
-# cascade-retired — e.g. top_revenue_orders cited heavy_hitter_keys,
-# retired r6). The prose is historical (accurate when written); THIS
-# map is the maintained authority for "which CURRENT GATE_ORDER entry
-# exercises the retired gate's mechanism", and import validation below
-# fails the build if any cited gate leaves the live window — the
-# structural check whose absence let the prose drift. Every retired
-# gate additionally keeps its own full DuckDB oracle in
-# tests/test_registry.py regardless of this map. When retiring a gate:
-# grep it here first.
-RETIRED_COVERED_BY: dict[str, tuple[str, ...]] = {
-    # global top-k: TakeOrderedAndProject plan-asserted on the live
-    # heavy-hitters gate (tests/test_plans.py)
-    "top_revenue_orders": ("cms_heavy_hitters",),
-    # countDistinct truth side of the HLL gate; broadcast rate join
-    "supplier_part_distinct": ("hll_merge_cardinality",
-                               "token_budget_mixture"),
-    "text_stats": ("profile_documents", "source_scorecard"),
-    # same tokens() helper (source totals) + learned-tokenizer lane
-    "token_counts": ("source_scorecard", "bpe_tokenizer_eval"),
-    # md5(content) groupBy keys
-    "doc_fingerprints": ("pipeline_doc_counts", "line_dedup"),
-    # scan-resident token scoring
-    "sentiment_scores": ("quality_classifier_eval",),
-    # semi is the anti complement; both anti gates are live
-    "high_value_semijoin": ("decontaminate", "embedding_decontaminate"),
-    # LSH pair generation feeds the clusters gate; jaccard side live
+# Retired gates: implemented and oracle-paired, run against their DuckDB
+# oracle at sf0.001 by tests/test_registry.py, but holding no driver
+# slot. Each maps to the live GATE_ORDER gates that run the same helper
+# or expression (named in the comment); a retired gate whose mechanism
+# no live gate runs maps to () and its registry test is its only
+# evidence. Cite a gate only after grepping that it calls the helper.
+RETIRED_GATES: dict[str, tuple[str, ...]] = {
+    # _exact_topk: the recall gates' ground truth
+    "ann_bruteforce_topk": ("ann_ivf_learned_recall", "ann_ivf_pq_recall"),
+    # _ivf_corpus + broadcast cell probe + _cos_expr rerank
+    # (ivf_topk_nprobe; learned_recall runs it at nprobe=1)
+    "ann_ivf_topk": ("ann_ivf_nprobe2", "ann_ivf_learned_recall"),
+    # _signature_col / _planes: no live caller
+    "ann_lsh_topk": (),
+    # functions.temporal.asof_join (forward): no live caller;
+    # asof_click_to_purchase hand-rolls a backward window
+    "asof_next_purchase": (),
+    # countDistinct(md5("text")) + approx-vs-exact tolerance flags
+    "cardinality_sketch": ("hll_merge_cardinality",),
+    # guarded dot_product_sql cosine self-join + threshold filter
+    "dedup_embedding_cosine": ("semantic_dedup",),
+    # md5("text") as the grouping / distinct key
+    "dedup_exact": ("source_scorecard", "hll_merge_cardinality"),
+    # keep-first row_number over an md5 key ordered by doc_id
+    "dedup_exact_rows": ("pipeline_doc_counts", "dedup_incremental_bloom"),
+    # _content_key + left_anti snapshot join + keep-first window
+    "dedup_incremental": ("dedup_incremental_bloom",),
+    # its two inputs: q_dedup_ngram_jaccard and minhash_lsh_pairs
     "dedup_lsh_recall": ("dedup_ngram_jaccard", "dedup_clusters"),
-    "session_topk_events": ("event_sessions", "dedup_keep_best",
-                            "event_anomaly_scores"),
-    # rank window + md5-keyed deterministic selection
-    "stratified_sample": ("dedup_keep_best", "train_split_counts",
-                          "token_budget_mixture"),
-    # running-frame cumsum + grouped ranking
-    "customer_order_stats": ("sequence_packing", "dedup_keep_best"),
-    # scalar string-fn family + grouped multi-agg
-    "brand_name_similarity": ("pii_scrub_stats", "pricing_summary",
-                              "profile_documents"),
-    "event_sliding_windows": ("event_watermark_windows",
-                              "event_sessions",
-                              "event_rollup_hierarchy"),
-    # broadcast joins + multi-table join-and-agg
-    "region_revenue": ("decontaminate", "token_budget_mixture",
-                       "skew_safe_revenue"),
-    "multimodal_manifest": ("multimodal_decode",
-                            "embedding_decontaminate",
-                            "pipeline_doc_counts"),
-    # vector norm/dot in the ANN family + grouped scalar agg
-    "embedding_label_stats": ("ann_ivf_learned_recall",
-                              "pricing_summary"),
-    # same md5 groupBy dedup stage / snapshot key
-    "dedup_exact": ("pipeline_doc_counts", "dedup_incremental_bloom"),
+    # minhash_lsh_pairs
+    "dedup_minhash_lsh": ("dedup_clusters",),
+    # _merged_spans
+    "dedup_span_strip": ("dedup_spans",),
+    # functions.text.fingerprint / normalized_text: no live caller
+    "doc_fingerprints": (),
+    # quality_exprs()["score"] (the classifier's teacher label)
+    "doc_quality": ("source_scorecard", "dedup_keep_best",
+                    "corpus_release_counts", "quality_classifier_eval"),
+    # l2_norm_sql("embedding")
+    "embedding_label_stats": ("ann_ivf_learned_recall", "ann_ivf_nprobe2"),
+    # F.window tumbling grid: no live caller (live gates bucket with
+    # date_trunc)
+    "event_counts_hourly": (),
+    # get_json_object: no live caller
+    "event_json_props": (),
+    # F.window sliding grid: no live caller
+    "event_sliding_windows": (),
+    # groupBy count + orderBy(desc count, key).limit top-k
+    "heavy_hitter_keys": ("cms_heavy_hitters",),
+    # _lang_pred_parts
+    "lang_id": ("source_scorecard",),
+    # _mix_weight + md5-fraction threshold admission
+    "mixture_sample": ("token_budget_mixture",),
+    # F.encode(text, "UTF-8") payload
+    "multimodal_manifest": ("multimodal_decode",),
+    # token-count bounds + size(array_distinct(toks)) / n_toks ratio
+    "quality_filter_stats": ("pipeline_doc_counts",),
+    # F.aggregate fold over tokens() with an element_at lookup
+    "sentiment_scores": ("quality_classifier_eval",),
+    # lag-gap session ids: no live caller; event_sessions uses
+    # session_window, whose end-exclusive boundary differs
+    "session_topk_events": (),
+    # hash_bucket(doc_id, n) shard routing; sequence_packing also
+    # sizes docs as size(split(text, " "))
+    "shard_assignment": ("sequence_packing", "corpus_shards_roundtrip",
+                         "train_split_counts"),
+    # per-group window ordered by md5(doc_id) (sequence_packing);
+    # per-group row_number (dedup_keep_best's keep_best)
+    "stratified_sample": ("sequence_packing", "dedup_keep_best"),
+    # size(tokens) and size(array_distinct(toks)) / n_toks
+    "text_stats": ("pipeline_doc_counts", "source_scorecard"),
+    # explode(tokens) + token groupBy + rounded ln idf: no live caller
+    # (lm_perplexity explodes bigrams)
+    "tfidf_top_terms": (),
+    # sum(size(tokens(text))) per source
+    "token_counts": ("source_scorecard",),
+    # _weight_expr_spark + min-of-md5 sample keys: no live caller
+    "weighted_sample": (),
 }
 _bad_cov = {
     k: sorted(set(v) - set(GATE_ORDER))
-    for k, v in RETIRED_COVERED_BY.items()
+    for k, v in RETIRED_GATES.items()
     if set(v) - set(GATE_ORDER)
 }
 if _bad_cov:
     raise RuntimeError(
-        f"RETIRED_COVERED_BY cites non-live gates (update the map "
-        f"when retiring them): {_bad_cov}"
-    )
-_bad_keys = set(RETIRED_COVERED_BY) - set(RETIRED_GATES)
-if _bad_keys:
-    raise RuntimeError(
-        f"RETIRED_COVERED_BY keys not in RETIRED_GATES: {_bad_keys}"
+        f"RETIRED_GATES cites non-live gates (update the map when "
+        f"retiring them): {_bad_cov}"
     )
 
 # real exceptions, not assert (r14 review): the docstring promises an

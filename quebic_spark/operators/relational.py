@@ -1,10 +1,10 @@
-"""Relational operator suite over the TPC-H-ish testdata.
+"""Relational gates over the TPC-H-ish testdata.
 
-The reference implements none of these (SURVEY §2.9 — verified absent);
-they are the Spark-provision layer: projection/filter, joins of all
-kinds, aggregation, grouping sets, windows, sort/limit/top-k, set ops.
-Every query here is a (spark, sf_dir) -> DataFrame callable paired with
-an ANSI-SQL oracle string for the DuckDB differential gate.
+The reference implements no relational layer (SURVEY §2.9 — verified
+absent). Two gates remain, each paired with an ANSI-SQL oracle for the
+DuckDB differential gate: ``pricing_summary`` (scan + pushed filter +
+partial aggregation) and ``skew_safe_revenue`` (the salted two-stage
+aggregation of ``quebic_spark.plans.skew``).
 
 Determinism discipline (applies to every query in this package):
   * Money/ratio aggregations are computed in DECIMAL (exact, and —
@@ -14,14 +14,11 @@ Determinism discipline (applies to every query in this package):
   * top-k always breaks ties on a unique key.
   * Aggregate/computed columns carry identical aliases in the Spark
     plan and the oracle SQL.
-
-Scale notes per query are inline: which side broadcasts, where the
-shuffles are, what AQE is expected to do.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from quebic_spark.session import read_immutable_parquet
@@ -100,382 +97,6 @@ GROUP BY l_returnflag, l_linestatus
 
 
 # ---------------------------------------------------------------------------
-# q_top_revenue_orders — TPC-H Q3 shape: 3-way join + agg + top-k.
-# Scale: customer filter first (selective), lineitem⋈orders shuffles on
-# orderkey; customer side broadcasts (small after the segment filter).
-# Top-10 with unique orderkey tie-break.
-# ---------------------------------------------------------------------------
-
-def q_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    revenue = F.col("l_extendedprice").cast(_PRICE) * (
-        _one() - F.col("l_discount").cast(_RATE)
-    )
-    joined = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(_dbl(F.sum(revenue)).alias("revenue"))
-    )
-    return joined.orderBy(
-        F.col("revenue").desc(), F.col("o_orderkey")
-    ).limit(10)
-
-
-ORACLE_TOP_REVENUE_ORDERS = """
-SELECT o_orderkey, o_orderdate, o_orderpriority,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(10,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-GROUP BY o_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, o_orderkey
-LIMIT 10
-"""
-
-
-# ---------------------------------------------------------------------------
-# q_region_revenue — TPC-H Q5 shape: 6-way star join + agg.
-# Scale: region/nation/supplier are dimension tables -> broadcast;
-# the only large shuffles are lineitem⋈orders and the final group-by.
-# ---------------------------------------------------------------------------
-
-def q_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    region = _t(spark, sf_dir, "region")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    revenue = F.col("l_extendedprice").cast(_PRICE) * (
-        _one() - F.col("l_discount").cast(_RATE)
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        # customer and supplier in the same nation (Q5 semantics)
-        .filter(F.col("c_nationkey") == F.col("s_nationkey"))
-        .join(F.broadcast(nation), F.col("s_nationkey") == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("r_name", "n_name")
-        .agg(_dbl(F.sum(revenue)).alias("revenue"))
-    )
-
-
-ORACLE_REGION_REVENUE = """
-SELECT r_name, n_name,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(10,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE c_nationkey = s_nationkey
-GROUP BY r_name, n_name
-"""
-
-
-# ---------------------------------------------------------------------------
-# q_top_orders_per_segment — window function top-k per group.
-# Scale: one shuffle on mktsegment for the window partition; the
-# rank filter applies before any downstream work (WindowGroupLimit
-# pushes the limit into the sort at the physical level).
-# ---------------------------------------------------------------------------
-
-def q_top_orders_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    return (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .withColumn("rank_in_segment", F.row_number().over(w))
-        .filter(F.col("rank_in_segment") <= 3)
-        .select(
-            "c_mktsegment",
-            "rank_in_segment",
-            "o_orderkey",
-            _dbl(F.col("o_totalprice")).alias("o_totalprice"),
-        )
-    )
-
-
-ORACLE_TOP_ORDERS_PER_SEGMENT = """
-SELECT c_mktsegment, rank_in_segment, o_orderkey, o_totalprice
-FROM (
-  SELECT c_mktsegment,
-         ROW_NUMBER() OVER (PARTITION BY c_mktsegment
-                            ORDER BY o_totalprice DESC, o_orderkey) AS rank_in_segment,
-         o_orderkey,
-         o_totalprice
-  FROM orders JOIN customer ON o_custkey = c_custkey
-) WHERE rank_in_segment <= 3
-"""
-
-
-# ---------------------------------------------------------------------------
-# q_customer_order_stats — join + window running aggregate per customer.
-# ---------------------------------------------------------------------------
-
-def q_customer_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy(F.col("o_orderdate"), F.col("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    price = F.col("o_totalprice").cast(_PRICE)
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        F.row_number()
-        .over(Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey"))
-        .alias("order_index"),
-        _dbl(F.sum(price).over(w)).alias("running_spend"),
-    )
-
-
-ORACLE_CUSTOMER_ORDER_STATS = """
-SELECT o_custkey, o_orderkey,
-  ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS order_index,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(10,2))) OVER (
-     PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_spend
-FROM orders
-"""
-
-
-# ---------------------------------------------------------------------------
-# q_customers_without_orders — anti join (NOT EXISTS).
-# Scale: left-anti join shuffles on custkey; at 100 TB this is the
-# canonical "set difference by key" plan (no distinct-then-except).
-# ---------------------------------------------------------------------------
-
-def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    big_orders = _t(spark, sf_dir, "orders").filter(
-        F.col("o_totalprice") > 200000
-    )
-    return (
-        cust.join(big_orders, cust.c_custkey == big_orders.o_custkey,
-                  "left_anti")
-        .select("c_custkey", "c_name", "c_mktsegment")
-    )
-
-
-ORACLE_CUSTOMERS_WITHOUT_ORDERS = """
-SELECT c_custkey, c_name, c_mktsegment
-FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey AND o_totalprice > 200000)
-"""
-
-
-# ---------------------------------------------------------------------------
-# q_part_supplier_overlap — set operations: parts supplied by both
-# cheap and expensive suppliers (intersect) and only-cheap (except).
-# ---------------------------------------------------------------------------
-
-def q_part_supplier_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    joined = li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-    rich = joined.filter(F.col("s_acctbal") >= 5000).select("l_partkey")
-    poor = joined.filter(F.col("s_acctbal") < 5000).select("l_partkey")
-    both = rich.intersect(poor).withColumn("category", F.lit("both"))
-    # set semantics (SQL EXCEPT): dedup before exceptAll, which is
-    # otherwise multiset-EXCEPT and keeps surplus occurrences
-    only_rich = rich.distinct().exceptAll(poor.distinct()).withColumn(
-        "category", F.lit("rich_only")
-    )
-    return both.unionByName(only_rich).select(
-        F.col("l_partkey").alias("partkey"), "category"
-    )
-
-
-ORACLE_PART_SUPPLIER_OVERLAP = """
-WITH rich AS (
-  SELECT l_partkey FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-  WHERE s_acctbal >= 5000),
-poor AS (
-  SELECT l_partkey FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-  WHERE s_acctbal < 5000)
-SELECT l_partkey AS partkey, 'both' AS category
-FROM (SELECT DISTINCT l_partkey FROM rich INTERSECT SELECT DISTINCT l_partkey FROM poor)
-UNION ALL
-SELECT l_partkey AS partkey, 'rich_only' AS category
-FROM (SELECT DISTINCT l_partkey FROM rich EXCEPT SELECT DISTINCT l_partkey FROM poor)
-"""
-
-
-# ---------------------------------------------------------------------------
-# q_order_priority_rollup — grouping sets (ROLLUP) with exact counts.
-# ---------------------------------------------------------------------------
-
-def q_order_priority_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        orders.rollup("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            _dbl(F.sum(F.col("o_totalprice").cast(_PRICE))).alias(
-                "total_spend"
-            ),
-        )
-    )
-
-
-ORACLE_ORDER_PRIORITY_ROLLUP = """
-SELECT o_orderstatus, o_orderpriority,
-       COUNT(*) AS n_orders,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(10,2))) AS DOUBLE) AS total_spend
-FROM orders
-GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-"""
-
-
-# ---------------------------------------------------------------------------
-# q_supplier_part_distinct — distinct aggregation: suppliers per part
-# brand + exact distinct part count.
-# ---------------------------------------------------------------------------
-
-def q_supplier_part_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy("p_brand")
-        .agg(
-            F.countDistinct("l_suppkey").alias("n_suppliers"),
-            F.countDistinct("l_partkey").alias("n_parts"),
-            F.count(F.lit(1)).alias("n_lineitems"),
-        )
-    )
-
-
-ORACLE_SUPPLIER_PART_DISTINCT = """
-SELECT p_brand,
-       COUNT(DISTINCT l_suppkey) AS n_suppliers,
-       COUNT(DISTINCT l_partkey) AS n_parts,
-       COUNT(*) AS n_lineitems
-FROM lineitem JOIN part ON l_partkey = p_partkey
-GROUP BY p_brand
-"""
-
-
-# ---------------------------------------------------------------------------
-# q_monthly_order_volume — date bucketing + aggregation (sort-free;
-# the driver compare is order-insensitive).
-# ---------------------------------------------------------------------------
-
-def q_monthly_order_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        orders.groupBy(
-            F.date_trunc("month", F.col("o_orderdate")).cast("date").alias(
-                "order_month"
-            )
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            _dbl(F.sum(F.col("o_totalprice").cast(_PRICE))).alias(
-                "total_spend"
-            ),
-        )
-    )
-
-
-ORACLE_MONTHLY_ORDER_VOLUME = """
-SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS order_month,
-       COUNT(*) AS n_orders,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(10,2))) AS DOUBLE) AS total_spend
-FROM orders
-GROUP BY 1
-"""
-
-
-# ---------------------------------------------------------------------------
-# q_high_value_semijoin — left-semi join (EXISTS) + selective filter.
-# ---------------------------------------------------------------------------
-
-def q_high_value_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 100000)
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi")
-        .select("c_custkey", "c_name", _dbl(F.col("c_acctbal")).alias("c_acctbal"))
-    )
-
-
-ORACLE_HIGH_VALUE_SEMIJOIN = """
-SELECT c_custkey, c_name, c_acctbal
-FROM customer
-WHERE EXISTS (SELECT 1 FROM orders
-              WHERE o_custkey = c_custkey AND o_totalprice > 100000)
-"""
-
-
-# ---------------------------------------------------------------------------
-# q_status_priority_cube — CUBE grouping sets (all 4 combinations).
-# ---------------------------------------------------------------------------
-
-def q_status_priority_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    return orders.cube("o_orderstatus", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        _dbl(F.sum(F.col("o_totalprice").cast(_PRICE))).alias("total_spend"),
-    )
-
-
-ORACLE_STATUS_PRIORITY_CUBE = """
-SELECT o_orderstatus, o_orderpriority,
-       COUNT(*) AS n_orders,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(10,2))) AS DOUBLE) AS total_spend
-FROM orders
-GROUP BY CUBE (o_orderstatus, o_orderpriority)
-"""
-
-
-# ---------------------------------------------------------------------------
-# q_returnflag_pivot — pivot on linestatus with fixed values (the
-# oracle mirrors via conditional aggregation, which is what a pivot is).
-# ---------------------------------------------------------------------------
-
-def q_returnflag_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    qty = F.col("l_quantity").cast(_QTY)
-    pivoted = (
-        li.groupBy("l_returnflag")
-        .pivot("l_linestatus", ["O", "F"])
-        .agg(F.sum(qty))
-    )
-    return pivoted.select(
-        "l_returnflag",
-        _dbl(F.coalesce(F.col("O"), F.lit(0))).alias("qty_open"),
-        _dbl(F.coalesce(F.col("F"), F.lit(0))).alias("qty_finished"),
-    )
-
-
-ORACLE_RETURNFLAG_PIVOT = """
-SELECT l_returnflag,
-  CAST(COALESCE(SUM(CAST(l_quantity AS DECIMAL(10,2)))
-                FILTER (l_linestatus = 'O'), 0) AS DOUBLE) AS qty_open,
-  CAST(COALESCE(SUM(CAST(l_quantity AS DECIMAL(10,2)))
-                FILTER (l_linestatus = 'F'), 0) AS DOUBLE) AS qty_finished
-FROM lineitem
-GROUP BY l_returnflag
-"""
-
-
-# ---------------------------------------------------------------------------
 # q_skew_safe_revenue — explicit two-stage salted aggregation
 # (quebic_spark.plans.skew). Exact-decimal partials make the result
 # identical to a direct groupBy, so the oracle is the plain SQL — the
@@ -520,215 +141,12 @@ GROUP BY l_returnflag
 """
 
 
-# ---------------------------------------------------------------------------
-# q_price_percentiles — exact percentiles (linear interpolation) per
-# priority. Both engines interpolate identically on sorted doubles.
-# ---------------------------------------------------------------------------
-
-def q_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    return orders.groupBy("o_orderpriority").agg(
-        F.expr("percentile(o_totalprice, 0.5)").alias("p50"),
-        F.expr("percentile(o_totalprice, 0.9)").alias("p90"),
-        F.count(F.lit(1)).alias("n_orders"),
-    )
-
-
-ORACLE_PRICE_PERCENTILES = """
-SELECT o_orderpriority,
-       quantile_cont(o_totalprice, 0.5) AS p50,
-       quantile_cont(o_totalprice, 0.9) AS p90,
-       COUNT(*) AS n_orders
-FROM orders
-GROUP BY o_orderpriority
-"""
-
-
-# ---------------------------------------------------------------------------
-# q_brand_name_similarity — string functions: levenshtein distance of
-# part names to their brand, length/affix predicates.
-# ---------------------------------------------------------------------------
-
-def q_brand_name_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
-    lev = F.levenshtein(F.upper("p_name"), F.upper("p_brand"))
-    return part.groupBy("p_brand").agg(
-        F.count(F.lit(1)).alias("n_parts"),
-        F.min(lev).alias("min_lev"),
-        F.max(lev).alias("max_lev"),
-        F.sum(F.col("p_name").startswith("a").cast("long")).alias(
-            "names_starting_a"
-        ),
-        F.sum((F.length("p_name") > 20).cast("long")).alias("long_names"),
-    )
-
-
-ORACLE_BRAND_NAME_SIMILARITY = """
-SELECT p_brand,
-       COUNT(*) AS n_parts,
-       MIN(levenshtein(upper(p_name), upper(p_brand))) AS min_lev,
-       MAX(levenshtein(upper(p_name), upper(p_brand))) AS max_lev,
-       CAST(SUM(CASE WHEN p_name LIKE 'a%' THEN 1 ELSE 0 END) AS BIGINT)
-         AS names_starting_a,
-       CAST(SUM(CASE WHEN length(p_name) > 20 THEN 1 ELSE 0 END) AS BIGINT)
-         AS long_names
-FROM part
-GROUP BY p_brand
-"""
-
-
-# ---------------------------------------------------------------------------
-# q_above_avg_customers — scalar subquery via the SQL API (Catalyst
-# parses SQL and DataFrame code into the same plans; this exercises the
-# SQL entry point).
-# ---------------------------------------------------------------------------
-
-def q_above_avg_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
-    return spark.sql(
-        """
-        SELECT c_custkey, c_name,
-               CAST(c_acctbal AS DOUBLE) AS c_acctbal
-        FROM customer_v
-        WHERE CAST(c_acctbal AS DECIMAL(12,2)) > (
-          SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) / COUNT(*)
-                      AS DECIMAL(12,2))
-          FROM customer_v
-        )
-        """
-    )
-
-
-ORACLE_ABOVE_AVG_CUSTOMERS = """
-SELECT c_custkey, c_name, c_acctbal
-FROM customer
-WHERE CAST(c_acctbal AS DECIMAL(12,2)) > (
-  SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) / COUNT(*)
-              AS DECIMAL(12,2))
-  FROM customer
-)
-"""
-
-
-# ---------------------------------------------------------------------------
-# q_urgent_vs_finished_outer — FULL OUTER join of two per-customer
-# aggregates; exercises outer-join NULL semantics + coalesce.
-# ---------------------------------------------------------------------------
-
-def q_urgent_vs_finished_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    urgent = (
-        orders.filter(F.col("o_orderpriority") == "1-URGENT")
-        .groupBy(F.col("o_custkey").alias("u_custkey"))
-        .agg(F.count(F.lit(1)).alias("n_urgent"))
-    )
-    finished = (
-        orders.filter(F.col("o_orderstatus") == "F")
-        .groupBy(F.col("o_custkey").alias("f_custkey"))
-        .agg(F.count(F.lit(1)).alias("n_finished"))
-    )
-    joined = urgent.join(
-        finished, urgent.u_custkey == finished.f_custkey, "full_outer"
-    )
-    return joined.select(
-        F.coalesce("u_custkey", "f_custkey").alias("custkey"),
-        F.coalesce("n_urgent", F.lit(0)).alias("n_urgent"),
-        F.coalesce("n_finished", F.lit(0)).alias("n_finished"),
-        (F.col("u_custkey").isNull() | F.col("f_custkey").isNull()).alias(
-            "one_sided"
-        ),
-    )
-
-
-ORACLE_URGENT_VS_FINISHED_OUTER = """
-WITH urgent AS (
-  SELECT o_custkey AS u_custkey, COUNT(*) AS n_urgent
-  FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY o_custkey
-),
-finished AS (
-  SELECT o_custkey AS f_custkey, COUNT(*) AS n_finished
-  FROM orders WHERE o_orderstatus = 'F' GROUP BY o_custkey
-)
-SELECT COALESCE(u_custkey, f_custkey) AS custkey,
-       COALESCE(n_urgent, 0) AS n_urgent,
-       COALESCE(n_finished, 0) AS n_finished,
-       (u_custkey IS NULL OR f_custkey IS NULL) AS one_sided
-FROM urgent FULL OUTER JOIN finished ON u_custkey = f_custkey
-"""
-
-
-# ---------------------------------------------------------------------------
-# q_order_date_parts — date-part extraction (year/quarter/month/day).
-# ---------------------------------------------------------------------------
-
-def q_order_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        orders.groupBy(
-            F.year("o_orderdate").alias("yr"),
-            F.quarter("o_orderdate").alias("qtr"),
-            F.month("o_orderdate").alias("mon"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.min(F.dayofmonth("o_orderdate")).alias("first_dom"),
-            F.max(F.dayofmonth("o_orderdate")).alias("last_dom"),
-        )
-    )
-
-
-ORACLE_ORDER_DATE_PARTS = """
-SELECT EXTRACT(year FROM o_orderdate) AS yr,
-       EXTRACT(quarter FROM o_orderdate) AS qtr,
-       EXTRACT(month FROM o_orderdate) AS mon,
-       COUNT(*) AS n_orders,
-       MIN(EXTRACT(day FROM o_orderdate)) AS first_dom,
-       MAX(EXTRACT(day FROM o_orderdate)) AS last_dom
-FROM orders
-GROUP BY 1, 2, 3
-"""
-
-
 QUERIES = {
     "pricing_summary": q_pricing_summary,
-    "top_revenue_orders": q_top_revenue_orders,
-    "region_revenue": q_region_revenue,
-    "top_orders_per_segment": q_top_orders_per_segment,
-    "customer_order_stats": q_customer_order_stats,
-    "customers_without_orders": q_customers_without_orders,
-    "part_supplier_overlap": q_part_supplier_overlap,
-    "order_priority_rollup": q_order_priority_rollup,
-    "supplier_part_distinct": q_supplier_part_distinct,
-    "monthly_order_volume": q_monthly_order_volume,
-    "high_value_semijoin": q_high_value_semijoin,
-    "status_priority_cube": q_status_priority_cube,
     "skew_safe_revenue": q_skew_safe_revenue,
-    "price_percentiles": q_price_percentiles,
-    "brand_name_similarity": q_brand_name_similarity,
-    "above_avg_customers": q_above_avg_customers,
-    "urgent_vs_finished_outer": q_urgent_vs_finished_outer,
-    "order_date_parts": q_order_date_parts,
-    "returnflag_pivot": q_returnflag_pivot,
 }
 
 ORACLES = {
     "pricing_summary": ORACLE_PRICING_SUMMARY,
-    "top_revenue_orders": ORACLE_TOP_REVENUE_ORDERS,
-    "region_revenue": ORACLE_REGION_REVENUE,
-    "top_orders_per_segment": ORACLE_TOP_ORDERS_PER_SEGMENT,
-    "customer_order_stats": ORACLE_CUSTOMER_ORDER_STATS,
-    "customers_without_orders": ORACLE_CUSTOMERS_WITHOUT_ORDERS,
-    "part_supplier_overlap": ORACLE_PART_SUPPLIER_OVERLAP,
-    "order_priority_rollup": ORACLE_ORDER_PRIORITY_ROLLUP,
-    "supplier_part_distinct": ORACLE_SUPPLIER_PART_DISTINCT,
-    "monthly_order_volume": ORACLE_MONTHLY_ORDER_VOLUME,
-    "high_value_semijoin": ORACLE_HIGH_VALUE_SEMIJOIN,
-    "status_priority_cube": ORACLE_STATUS_PRIORITY_CUBE,
     "skew_safe_revenue": ORACLE_SKEW_SAFE_REVENUE,
-    "price_percentiles": ORACLE_PRICE_PERCENTILES,
-    "brand_name_similarity": ORACLE_BRAND_NAME_SIMILARITY,
-    "above_avg_customers": ORACLE_ABOVE_AVG_CUSTOMERS,
-    "urgent_vs_finished_outer": ORACLE_URGENT_VS_FINISHED_OUTER,
-    "order_date_parts": ORACLE_ORDER_DATE_PARTS,
-    "returnflag_pivot": ORACLE_RETURNFLAG_PIVOT,
 }

@@ -1027,7 +1027,7 @@ def compression_ratio(docs: DataFrame, text_col: str = "text") -> DataFrame:
 # by at most 1 ulp, far below the rounding grain — then summed
 # EXACTLY as DECIMAL(28,6) so the per-doc total is independent of
 # partitioning/combine order on both engines; the final average
-# rounds to 4.
+# rounds half-up to 4 in integer arithmetic (_mean4_sql).
 # ---------------------------------------------------------------------------
 
 LM_TRAIN_PCT = 50       # md5-bucket split: buckets [0,50) train the LM
@@ -1037,6 +1037,24 @@ LM_TRAIN_PCT = 50       # md5-bucket split: buckets [0,50) train the LM
 # instead of being constant — tune against the reference corpus in a
 # real deployment (same policy as the repetition_stats thresholds)
 LM_NLL_THRESHOLD = 3.55
+
+
+def _mean4_sql(total: str, n: str, int_div: str) -> str:
+    """``total / n`` rounded half-up to 4 decimals, in exact integer
+    arithmetic over micro-units (``total`` has scale 6). A double
+    quotient can sit on the rounding boundary, where Spark and DuckDB
+    round it different ways: 43.797650 / 13 is exactly 3.36905, but
+    DuckDB's decimal division returns the double 3.3690499999999997.
+    Every nll term is ln((c1+vsz)/(c12+1)) >= 0, so floor division is
+    half-up. ``int_div`` is the dialect's integer division: ``div`` in
+    Spark SQL, ``//`` in DuckDB."""
+    m = f"CAST({total} * 1000000 AS BIGINT)"
+    return f"CAST(({m} + 50 * {n}) {int_div} (100 * {n}) AS DOUBLE) / 10000"
+
+
+def half_up_mean4(total: str, n: str) -> Column:
+    """Spark side of :func:`_mean4_sql` over columns ``total``, ``n``."""
+    return F.expr(_mean4_sql(total, n, "div"))
 
 
 def _doc_bigrams(docs: DataFrame) -> DataFrame:
@@ -1145,7 +1163,7 @@ def _score_lm(
             ).alias("_s"),
         )
     )
-    avg_nll = F.round(F.col("_s").cast("double") / F.col("n_bigrams"), 4)
+    avg_nll = half_up_mean4("_s", "n_bigrams")
     return scored.select(
         "doc_id",
         "n_bigrams",
@@ -1335,7 +1353,7 @@ terms AS (
 ),
 s AS (
   SELECT doc_id, COUNT(*) AS n_bigrams,
-         round(CAST(SUM(nll) AS DOUBLE) / COUNT(*), 4) AS avg_nll
+         {_mean4_sql("SUM(nll)", "COUNT(*)", "//")} AS avg_nll
   FROM terms GROUP BY doc_id
 )
 SELECT doc_id, n_bigrams, avg_nll,

@@ -37,3 +37,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    """The oracle side: a DuckDB connection with one view per testdata
+    table."""
+    duckdb = pytest.importorskip("duckdb")
+    con = duckdb.connect()
+    for f in sorted(os.listdir(sf_dir)):
+        if f.endswith(".parquet"):
+            con.execute(
+                f"CREATE VIEW {f[:-8]} AS SELECT * FROM "
+                f"read_parquet('{sf_dir}/{f}')"
+            )
+    yield con
+    con.close()

@@ -15,7 +15,7 @@ import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
-from check_oracle import frame_fingerprint, pandas_rows  # noqa: E402
+from check_oracle import spark_fingerprint  # noqa: E402
 
 from quebic_spark.operators import ALL_QUERIES  # noqa: E402
 
@@ -40,9 +40,7 @@ def test_gate_invariant_under_shuffle_partition_count(name, spark, sf_dir):
             spark.conf.set("spark.sql.shuffle.partitions", parts)
             clear_caches(include_ivf_index=True)
             df = ALL_QUERIES[name](spark, sf_dir)
-            fps.append(
-                frame_fingerprint(df.columns, pandas_rows(df.toPandas()))
-            )
+            fps.append(spark_fingerprint(df))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         clear_caches(include_ivf_index=True)

@@ -1,8 +1,9 @@
 """Physical-plan regression tests: the plan shape IS the 100 TB story.
 
 Locks in: predicate pushdown into the parquet scan, column pruning,
-map-side partial aggregation, broadcast joins for dimension tables, and
-top-k compiling to TakeOrderedAndProject (no global sort).
+map-side partial aggregation, broadcast joins for the small side of a
+join (benchmark grams, query vectors, LM tables), and top-k compiling
+to TakeOrderedAndProject (no global sort).
 """
 
 import re
@@ -28,23 +29,6 @@ def test_pricing_summary_pushdown_and_pruning(spark, sf_dir):
     assert "l_orderkey" not in read_cols
     # map-side combine
     assert "partial_" in plan
-
-
-def test_star_join_broadcasts(spark, sf_dir):
-    from quebic_spark.operators.relational import q_region_revenue
-
-    plan = _plan(q_region_revenue(spark, sf_dir))
-    assert plan.count("BroadcastHashJoin") >= 3
-    assert "CartesianProduct" not in plan
-
-
-def test_topk_compiles_to_take_ordered(spark, sf_dir):
-    from quebic_spark.operators.relational import q_top_revenue_orders
-
-    plan = _plan(q_top_revenue_orders(spark, sf_dir))
-    assert "TakeOrderedAndProject" in plan
-    # no global Sort node outside the top-k operator
-    assert "Sort [revenue" not in plan
 
 
 def test_ann_query_side_broadcasts(spark, sf_dir):
@@ -144,10 +128,8 @@ def test_ann_ivf_cell_join_broadcasts_queries(spark, sf_dir):
 
 
 def test_audit_helpers(spark, sf_dir):
-    from quebic_spark.operators.relational import (
-        q_pricing_summary,
-        q_region_revenue,
-    )
+    from quebic_spark.operators.relational import q_pricing_summary
+    from quebic_spark.operators.textops import q_decontaminate
     from quebic_spark.plans import join_kinds, pushed_filters, scan_columns
 
     assert any(
@@ -155,8 +137,8 @@ def test_audit_helpers(spark, sf_dir):
     )
     cols = scan_columns(q_pricing_summary(spark, sf_dir))
     assert cols and len(cols[0]) == 7
-    kinds = join_kinds(q_region_revenue(spark, sf_dir))
-    assert kinds.get("BroadcastHashJoin", 0) >= 3
+    kinds = join_kinds(q_decontaminate(spark, sf_dir))
+    assert kinds.get("BroadcastHashJoin", 0) >= 1
     assert "CartesianProduct" not in kinds
 
 

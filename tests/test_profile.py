@@ -9,7 +9,7 @@ import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
-from check_oracle import frame_fingerprint, pandas_rows  # noqa: E402
+from check_oracle import duck_fingerprint, spark_fingerprint  # noqa: E402
 
 from quebic_spark.functions.profile import (  # noqa: E402
     _kind,
@@ -18,35 +18,16 @@ from quebic_spark.functions.profile import (  # noqa: E402
 )
 
 
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    duckdb = pytest.importorskip("duckdb")
-    con = duckdb.connect()
-    for t in ("orders", "lineitem", "customer"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    yield con
-    con.close()
-
-
 @pytest.mark.parametrize("table", ["orders", "lineitem", "customer"])
 def test_profile_matches_duckdb_oracle(table, spark, sf_dir, duck):
     """profile(exact_distinct=True) hash-matches a per-column UNION ALL
     oracle across numeric / string / temporal columns."""
     df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
     sdf = profile(df, exact_distinct=True)
-    sn, scn, sh = frame_fingerprint(sdf.columns, pandas_rows(sdf.toPandas()))
-
     cols = [(f.name, _kind(f.dataType)) for f in df.schema.fields
             if _kind(f.dataType) != "complex"]
     rel = duck.execute(profile_oracle_sql(table, cols))
-    dcols = [d[0] for d in rel.description]
-    drows = pandas_rows(rel.fetchdf(date_as_object=True))
-    dn, dcn, dh = frame_fingerprint(dcols, drows)
-    assert (sn, scn) == (dn, dcn), f"{table}: shape {sn}/{scn} != {dn}/{dcn}"
-    assert sh == dh, f"{table}: profile hash mismatch over {sn} rows"
+    assert spark_fingerprint(sdf) == duck_fingerprint(rel), table
 
 
 def test_profile_null_accounting(spark):

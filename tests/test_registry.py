@@ -3,12 +3,13 @@
 The driver's correctness gate records only the first 50 registry
 entries, so ``quebic_spark.operators`` curates an explicit
 ``GATE_ORDER`` (checked by the driver) and ``RETIRED_GATES`` (gates
-whose operator coverage is subsumed by a live entry). This module is
-the evidence backstop: every retired gate is still run against its
-DuckDB oracle at sf0.001 with the SAME fingerprint comparison the
-driver uses (pandas fetch on both sides, columns sorted by name,
-order-insensitive row hash), so retiring a gate never removes
-hash-level verification — it only frees a driver slot.
+without a driver slot, each mapped to the live gates that run its
+helper, or to ``()``). This module is the evidence backstop: every
+retired gate is still run against its DuckDB oracle at sf0.001 with
+the SAME fingerprint comparison the driver uses (pandas fetch on both
+sides, columns sorted by name, order-insensitive row hash), so
+retiring a gate never removes hash-level verification — it only frees
+a driver slot.
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
-from check_oracle import TABLES, frame_fingerprint, pandas_rows  # noqa: E402
+from check_oracle import duck_fingerprint, spark_fingerprint  # noqa: E402
 
 from quebic_spark.operators import (  # noqa: E402
     ALL_ORACLES,
@@ -45,31 +46,29 @@ def test_live_gates_are_oracle_paired():
     assert missing == [], f"rows-only gates in driver window: {missing}"
 
 
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    duckdb = pytest.importorskip("duckdb")
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
-    yield con
-    con.close()
+# Retired gates no live gate covers: their oracle run below is their
+# only evidence. A new retirement that cites nothing must be added
+# here, so it shows as a diff.
+_UNCOVERED_RETIRED = {
+    "ann_lsh_topk", "asof_next_purchase", "doc_fingerprints",
+    "event_counts_hourly", "event_json_props", "event_sliding_windows",
+    "session_topk_events", "tfidf_top_terms", "weighted_sample",
+}
+
+
+def test_retired_gate_citations_are_live_and_explicit():
+    assert {n for n, v in RETIRED_GATES.items() if not v} == _UNCOVERED_RETIRED
+    cited = {g for v in RETIRED_GATES.values() for g in v}
+    assert cited - set(GATE_ORDER) == set()
 
 
 @pytest.mark.parametrize("name", sorted(RETIRED_GATES))
 def test_retired_gate_still_matches_oracle(name, spark, sf_dir, duck):
     assert name in ALL_ORACLES, f"retired gate {name} lost its oracle"
     sdf = ALL_QUERIES[name](spark, sf_dir)
-    sn, scn, sh = frame_fingerprint(sdf.columns, pandas_rows(sdf.toPandas()))
-    rel = duck.execute(ALL_ORACLES[name])
-    dcols = [d[0] for d in rel.description]
-    drows = pandas_rows(rel.fetchdf(date_as_object=True))
-    dn, dcn, dh = frame_fingerprint(dcols, drows)
-    assert (sn, scn) == (dn, dcn), f"{name}: shape {sn}/{scn} != {dn}/{dcn}"
-    assert sh == dh, f"{name}: value hash mismatch over {sn} rows"
+    assert spark_fingerprint(sdf) == duck_fingerprint(
+        duck.execute(ALL_ORACLES[name])
+    ), name
 
 
 def test_minhash_regex_basis_matches_oracle(spark, sf_dir, duck):
@@ -84,18 +83,11 @@ def test_minhash_regex_basis_matches_oracle(spark, sf_dir, duck):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     sdf = minhash_lsh_pairs(docs, basis="regex")
-    sn, scn, sh = frame_fingerprint(sdf.columns, pandas_rows(sdf.toPandas()))
-
     sql = (
         f"WITH {_minhash_cte_block(basis='regex')}\n"
         "SELECT doc_a, doc_b, jaccard FROM pairs"
     )
-    rel = duck.execute(sql)
-    dcols = [d[0] for d in rel.description]
-    drows = pandas_rows(rel.fetchdf(date_as_object=True))
-    dn, dcn, dh = frame_fingerprint(dcols, drows)
-    assert (sn, scn) == (dn, dcn), f"shape {sn}/{scn} != {dn}/{dcn}"
-    assert sh == dh, f"regex-basis value hash mismatch over {sn} rows"
+    assert spark_fingerprint(sdf) == duck_fingerprint(duck.execute(sql))
     # and the basis genuinely changes the shingle universe: the regex
     # basis must differ from whitespace on punctuation-bearing text
     ws = minhash_lsh_pairs(docs, basis="whitespace")
@@ -313,12 +305,7 @@ def test_streaming_dedup_tier_fingerprint_matches_batch_oracle(
     got = spark.read.parquet(sink).select(
         "doc_id", "content_key", "source"
     )
-    sn, scn, sh = frame_fingerprint(
-        got.columns, pandas_rows(got.toPandas())
+    # the streamed tier must hash-match the batch oracle
+    assert spark_fingerprint(got) == duck_fingerprint(
+        duck.execute(D.ORACLE_DEDUP_INCREMENTAL)
     )
-    rel = duck.execute(D.ORACLE_DEDUP_INCREMENTAL)
-    dcols = [d[0] for d in rel.description]
-    drows = pandas_rows(rel.fetchdf(date_as_object=True))
-    dn, dcn, dh = frame_fingerprint(dcols, drows)
-    assert (sn, scn) == (dn, dcn), f"shape {sn}/{scn} != {dn}/{dcn}"
-    assert sh == dh, f"streamed tier hash != batch oracle ({sn} rows)"

@@ -14,18 +14,6 @@ from quebic_spark.operators.textops import (
 
 
 @pytest.fixture(scope="module")
-def duck(sf_dir):
-    duckdb = pytest.importorskip("duckdb")
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
-    yield con
-    con.close()
-
-
-@pytest.fixture(scope="module")
 def scored(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     toks = F.split(F.col("text"), " ")
@@ -166,6 +154,24 @@ def test_lm_score_matches_hand_computation(spark):
     # "a b": ln(5/3) twice, "b a": ln((1+3)/(1+1)) = ln(2)
     want1 = (2 * round(math.log(5 / 3), 6) + round(math.log(2.0), 6)) / 3
     assert out[1]["avg_nll"] == pytest.approx(round(want1, 4), abs=1e-9)
+
+
+def test_lm_mean_rounds_half_up_on_both_engines(spark):
+    """43.797650 / 13 is exactly 3.36905, but the double quotient is
+    3.3690499999999997, which Spark's round() took to 3.369 and
+    DuckDB's to 3.3691. The exact integer form gives 3.3691 on both."""
+    duckdb = pytest.importorskip("duckdb")
+    from quebic_spark.operators.textops import (
+        ORACLE_LM_PERPLEXITY, _mean4_sql, half_up_mean4,
+    )
+
+    assert _mean4_sql("SUM(nll)", "COUNT(*)", "//") in ORACLE_LM_PERPLEXITY
+    total = "CAST(43.797650 AS DECIMAL(38,6))"
+    got = spark.sql(f"SELECT {total} AS s, 13L AS n").select(
+        half_up_mean4("s", "n")
+    ).first()[0]
+    oracle = duckdb.sql(f"SELECT {_mean4_sql(total, '13', '//')}")
+    assert got == oracle.fetchone()[0] == 3.3691
 
 
 def test_lm_score_identical_with_and_without_bi_broadcast(spark):

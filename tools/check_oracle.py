@@ -93,6 +93,19 @@ def frame_fingerprint(columns: list[str], rows: list[tuple]) -> tuple[int, list[
     return len(rows), names, h
 
 
+def spark_fingerprint(sdf) -> tuple[int, list[str], str]:
+    return frame_fingerprint(sdf.columns, pandas_rows(sdf.toPandas()))
+
+
+def duck_fingerprint(rel) -> tuple[int, list[str], str]:
+    # date_as_object keeps DATE as datetime.date (what Spark's toPandas
+    # yields) instead of midnight datetime64
+    return frame_fingerprint(
+        [d[0] for d in rel.description],
+        pandas_rows(rel.fetchdf(date_as_object=True)),
+    )
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -122,11 +135,13 @@ def main() -> int:
         if unknown:
             # a typo'd --only previously matched nothing and exited 0
             # — a false-green gate run (r14 review). Retired gates are
-            # absent from the live window too; point at the registry.
+            # absent from the live window too: their oracles run in
+            # tests/test_registry.py, not here.
             print(
                 f"ERROR: --only names not in the live query window: "
-                f"{unknown} (see operators/__init__.py GATE_ORDER / "
-                f"RETIRED_GATES)"
+                f"{unknown} (live gates: operators/__init__.py "
+                f"GATE_ORDER; a RETIRED_GATES name runs only in "
+                f"tests/test_registry.py)"
             )
             return 2
 
